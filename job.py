@@ -95,11 +95,13 @@ def main(argv: list[str] | None = None) -> int:
         p.error("--export requires --assemble")
 
     # Late imports so --py-files distribution is what resolves the package.
-    from ocr_spark.pipeline import (
-        DEFAULT_NUM_PARTS,
-        DEFAULT_TURN_BUCKET,
-        read_lineage,
-        run_pipeline,
+    from ocr_spark import pipeline
+
+    # the output layout is the one choice: how parts are committed and read
+    run, read_lineage = (
+        (pipeline.run_pipeline_snapshots, pipeline.read_lineage_table)
+        if args.snapshot_table
+        else (pipeline.run_pipeline, pipeline.read_lineage)
     )
 
     spark = SparkSession.builder.appName("ocr_spark.job").getOrCreate()
@@ -112,25 +114,16 @@ def main(argv: list[str] | None = None) -> int:
     # warm-up duration is still reported in the summary line.
     t_warm = time.monotonic()
     if not args.no_warmup:
-        from ocr_spark.pipeline import warmup_python_workers
-
-        warmup_python_workers(spark)
+        pipeline.warmup_python_workers(spark)
     warmup_sec = time.monotonic() - t_warm
 
     t0 = time.monotonic()
-    runner = run_pipeline
-    lineage_reader = read_lineage
-    if args.snapshot_table:
-        from ocr_spark.pipeline import read_lineage_table, run_pipeline_snapshots
-
-        runner = run_pipeline_snapshots
-        lineage_reader = read_lineage_table
-    extracted = runner(
+    extracted = run(
         spark,
         args.input,
         args.output,
-        num_parts=args.num_parts or DEFAULT_NUM_PARTS,
-        turn_bucket=args.turn_bucket or DEFAULT_TURN_BUCKET,
+        num_parts=args.num_parts or pipeline.DEFAULT_NUM_PARTS,
+        turn_bucket=args.turn_bucket or pipeline.DEFAULT_TURN_BUCKET,
         start_turn=args.start_turn,
         end_turn=args.end_turn,
         resume=args.resume,
@@ -140,7 +133,7 @@ def main(argv: list[str] | None = None) -> int:
     )
     # Row count comes from the lineage table (one row per logical part),
     # not a second scan over the freshly written data files.
-    lineage = lineage_reader(spark, args.output)
+    lineage = read_lineage(spark, args.output)
     lin = lineage.agg(
         F.count("*").alias("parts"),
         F.coalesce(F.sum("n_turns"), F.lit(0)).alias("rows"),
@@ -159,14 +152,7 @@ def main(argv: list[str] | None = None) -> int:
         )
     assembled_rows = None
     if args.assemble:
-        from ocr_spark.pipeline import (
-            assemble_conversations,
-            read_extracted,
-            read_extracted_table,
-        )
-
-        reader = read_extracted_table if args.snapshot_table else read_extracted
-        assembled = assemble_conversations(reader(spark, args.output))
+        assembled = pipeline.assemble_conversations(extracted)
         # sibling dir: the output root is a rec=...-partitioned dataset and
         # must not grow foreign subdirectories
         apath = args.output.rstrip("/") + "_assembled"

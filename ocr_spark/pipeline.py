@@ -2,16 +2,17 @@
 
 Dataflow (SURVEY.md §3.4):
 
-    read transcripts parquet
-      → optional turn-range filter          (partition/rowgroup pruning)
-      → optional resume anti-join           (skip finished logical parts)
+    read_transcripts: parquet → optional turn-range filter (row-group pruning)
+    extract_stage, the one place the plan is built:
       → part_id = pmod(xxhash64(conv_id, floor(turn_idx/BUCKET)), P)
-        repartition(P, part_id)             (explicit SALTED repartition:
+      → optional resume anti-join / only_parts filter (skip logical parts)
+      → repartition(P, part_id)             (explicit SALTED repartition:
                                              the turn bucket splits long
                                              conversations across parts)
       → ONE fused mapInArrow stage: route(html|grid|json|text) → extract
         → clean → serialize, emitting per-logical-part LINEAGE rows in-band
-      → write parquet partitioned by rec ∈ {data, lineage}
+    run_pipeline / run_pipeline_snapshots: find committed parts, then write
+      parquet partitioned by rec ∈ {data, lineage} / commit one snapshot
 
 Design notes for 100-TB scale:
 
@@ -42,6 +43,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ocr_spark import table as tbl
 from ocr_spark.kernels.align import align_pages
 from ocr_spark.kernels.extract import (
     TOOL_FLAKY,
@@ -50,6 +52,7 @@ from ocr_spark.kernels.extract import (
     TOOL_JSON,
     extract_turn,
 )
+from ocr_spark.operators.relational import anti_join_unfinished
 
 #: Default number of logical resume partitions; at 10^12 turns this would be
 #: sized to ~1-4 GB of input per part (e.g. 2^17 parts), here sized for
@@ -354,36 +357,81 @@ def extract_stage(
     df: DataFrame,
     num_parts: int = DEFAULT_NUM_PARTS,
     turn_bucket: int = DEFAULT_TURN_BUCKET,
+    *,
+    finished: DataFrame | None = None,
+    only_parts: list[int] | None = None,
 ) -> DataFrame:
-    """transcripts DataFrame → extracted DataFrame (data + lineage rows)."""
-    salted = (
-        with_part_id(df, num_parts, turn_bucket)
+    """transcripts DataFrame → extracted DataFrame (data + lineage rows).
+
+    ``finished`` (a ``part_id`` column, see :func:`_finished_parts`) drops
+    the logical parts an earlier run committed; ``only_parts`` keeps just
+    the listed parts (used by tests to simulate a job killed after k
+    partitions).
+    """
+    df = with_part_id(df, num_parts, turn_bucket)
+    if finished is not None:
+        df = anti_join_unfinished(df, finished, "part_id")
+    if only_parts is not None:
+        df = df.filter(F.col("part_id").isin([int(p) for p in only_parts]))
+    return (
         # prune to the kernel's columns BEFORE the shuffle: ts (and any
         # extra user columns) never cross the exchange or the Python worker
-        .select("part_id", "conv_id", "turn_idx", "text", "tool")
+        df.select("part_id", "conv_id", "turn_idx", "text", "tool")
         .repartition(num_parts, "part_id")
+        .mapInArrow(_extract_batches, EXTRACT_SCHEMA)
     )
-    return salted.mapInArrow(_extract_batches, EXTRACT_SCHEMA)
 
 
-def read_transcripts(spark: SparkSession, path: str) -> DataFrame:
-    return spark.read.parquet(path)
+def read_transcripts(
+    spark: SparkSession,
+    path: str,
+    *,
+    start_turn: int | None = None,
+    end_turn: int | None = None,
+) -> DataFrame:
+    """The transcripts parquet, optionally cut to turns in
+    [start_turn, end_turn] (pushed down to the parquet scan)."""
+    df = spark.read.parquet(path)
+    if start_turn is not None:
+        df = df.filter(F.col("turn_idx") >= F.lit(int(start_turn)))
+    if end_turn is not None:
+        df = df.filter(F.col("turn_idx") <= F.lit(int(end_turn)))
+    return df
 
 
-def read_extracted(spark: SparkSession, output_path: str) -> DataFrame:
-    """The data rows of a pipeline output (rec partition pruned at scan)."""
-    df = spark.read.parquet(output_path)
+def _data_rows(df: DataFrame) -> DataFrame:
     return df.filter(F.col("rec") == "data").drop("rec")
 
 
-def read_lineage(spark: SparkSession, output_path: str) -> DataFrame:
-    """The lineage table of a pipeline output, JSON-decoded."""
-    df = spark.read.parquet(output_path)
+def _lineage_rows(df: DataFrame) -> DataFrame:
     return (
         df.filter(F.col("rec") == "lineage")
         .select(F.from_json("extracted_text", LINEAGE_JSON_SCHEMA).alias("l"))
         .select("l.*")
     )
+
+
+def _finished_parts(lineage: DataFrame) -> DataFrame:
+    """The logical parts a committed run finished: the resume anti-join's
+    (small, broadcast) side."""
+    return lineage.filter(F.col("status") == "ok").select("part_id").distinct()
+
+
+def _has_success_marker(spark: SparkSession, path: str) -> bool:
+    """Whether a completed Spark write left ``_SUCCESS`` at ``path`` (checked
+    through the Hadoop filesystem, so any URI scheme Spark reads works)."""
+    marker = spark._jvm.org.apache.hadoop.fs.Path(path, "_SUCCESS")
+    return marker.getFileSystem(spark._jsc.hadoopConfiguration()).exists(marker)
+
+
+def read_extracted(spark: SparkSession, output_path: str) -> DataFrame:
+    """The data rows of a pipeline output (rec partition pruned at scan)."""
+    return _data_rows(spark.read.parquet(output_path))
+
+
+def read_lineage(spark: SparkSession, output_path: str) -> DataFrame:
+    """The lineage table of a pipeline output, JSON-decoded."""
+    return _lineage_rows(spark.read.parquet(output_path))
 
 
 def run_pipeline(
@@ -403,38 +451,19 @@ def run_pipeline(
     ``resume=True`` reads the existing output's lineage, and processes only
     logical parts without an ok lineage row, appending to the same output —
     the reference's per-page skip-and-continue (scripts/ExtractX_OCR.py:282)
-    scaled up to partition granularity (BASELINE.json north_rule).
+    scaled up to partition granularity (BASELINE.json north_rule). Resume
+    starts a fresh run only when no write completed at ``output_path`` (no
+    ``_SUCCESS`` marker); any other output that is not a pipeline output
+    raises instead of being overwritten.
     ``only_parts`` restricts processing (used by tests to simulate a job
     killed after k partitions).
     """
-    df = read_transcripts(spark, input_path)
-    if start_turn is not None:
-        df = df.filter(F.col("turn_idx") >= F.lit(int(start_turn) ))
-    if end_turn is not None:
-        df = df.filter(F.col("turn_idx") <= F.lit(int(end_turn)))
-    df = with_part_id(df, num_parts, turn_bucket)
-    mode = "overwrite"
-    if resume:
-        try:
-            finished = (
-                read_lineage(spark, output_path)
-                .filter(F.col("status") == "ok")
-                .select("part_id")
-                .distinct()
-            )
-            finished.count()  # force read now; a missing output → fresh run
-        except Exception:
-            finished = None
-        if finished is not None:
-            df = df.join(F.broadcast(finished), "part_id", "left_anti")
-            mode = "append"
-    if only_parts is not None:
-        df = df.filter(F.col("part_id").isin([int(p) for p in only_parts]))
-    out = (
-        df.select("part_id", "conv_id", "turn_idx", "text", "tool")
-        .repartition(num_parts, "part_id")
-        .mapInArrow(_extract_batches, EXTRACT_SCHEMA)
-    )
+    finished = None
+    if resume and _has_success_marker(spark, output_path):
+        finished = _finished_parts(read_lineage(spark, output_path))
+    df = read_transcripts(spark, input_path, start_turn=start_turn, end_turn=end_turn)
+    out = extract_stage(df, num_parts, turn_bucket, finished=finished, only_parts=only_parts)
+    mode = "overwrite" if finished is None else "append"
     out.write.partitionBy("rec").mode(mode).parquet(output_path)
     return read_extracted(spark, output_path)
 
@@ -460,54 +489,23 @@ def run_pipeline_snapshots(
     behavior the north_rule names. Lineage rows ride the same commit, so
     data and its completion record become visible together.
     """
-    from ocr_spark import table as tbl
-
-    df = read_transcripts(spark, input_path)
-    if start_turn is not None:
-        df = df.filter(F.col("turn_idx") >= F.lit(int(start_turn)))
-    if end_turn is not None:
-        df = df.filter(F.col("turn_idx") <= F.lit(int(end_turn)))
-    df = with_part_id(df, num_parts, turn_bucket)
-    overwrite = True
+    finished = None
     if resume and tbl.current_snapshot_id(table_root) is not None:
-        finished = (
-            tbl.read_table(spark, table_root)
-            .filter((F.col("rec") == "lineage") & (F.col("status") == "ok"))
-            .select("part_id")
-            .distinct()
-        )
-        df = df.join(F.broadcast(finished), "part_id", "left_anti")
-        overwrite = False
-    if only_parts is not None:
-        df = df.filter(F.col("part_id").isin([int(p) for p in only_parts]))
-    out = (
-        df.select("part_id", "conv_id", "turn_idx", "text", "tool")
-        .repartition(num_parts, "part_id")
-        .mapInArrow(_extract_batches, EXTRACT_SCHEMA)
+        finished = _finished_parts(read_lineage_table(spark, table_root))
+    df = read_transcripts(spark, input_path, start_turn=start_turn, end_turn=end_turn)
+    out = extract_stage(df, num_parts, turn_bucket, finished=finished, only_parts=only_parts)
+    tbl.commit_append(
+        spark, table_root, out, part_col="part_id", overwrite=finished is None
     )
-    tbl.commit_append(spark, table_root, out, part_col="part_id", overwrite=overwrite)
     return read_extracted_table(spark, table_root)
 
 
 def read_extracted_table(spark: SparkSession, table_root: str) -> DataFrame:
-    from ocr_spark import table as tbl
-
-    return (
-        tbl.read_table(spark, table_root)
-        .filter(F.col("rec") == "data")
-        .drop("rec")
-    )
+    return _data_rows(tbl.read_table(spark, table_root))
 
 
 def read_lineage_table(spark: SparkSession, table_root: str) -> DataFrame:
-    from ocr_spark import table as tbl
-
-    return (
-        tbl.read_table(spark, table_root)
-        .filter(F.col("rec") == "lineage")
-        .select(F.from_json("extracted_text", LINEAGE_JSON_SCHEMA).alias("l"))
-        .select("l.*")
-    )
+    return _lineage_rows(tbl.read_table(spark, table_root))
 
 
 ASSEMBLE_SCHEMA = T.StructType(

@@ -36,10 +36,9 @@ def main(argv=None) -> int:
 
     import numpy as np
     import pandas as pd
-    from pyspark.sql import functions as F
 
     import bench
-    from ocr_spark.pipeline import with_part_id
+    from ocr_spark.pipeline import extract_stage, with_part_id
     from ocr_spark.session import get_spark
 
     spark = get_spark(app="skew-demo", master=f"local[{args.cpus}]")
@@ -93,22 +92,14 @@ def main(argv=None) -> int:
 
     results = {}
     for label, bucket in [("unsalted", 1 << 40), ("salted", 64)]:
-        parted = with_part_id(df, args.num_parts, bucket).select(
-            "part_id", "conv_id", "turn_idx", "text", "tool"
-        )
+        parted = with_part_id(df, args.num_parts, bucket)
         sizes = (
             parted.groupBy("part_id").count().toPandas()["count"].describe()
         )
-        from ocr_spark.pipeline import _extract_batches, EXTRACT_SCHEMA
-
         t0 = time.monotonic()
-        (
-            parted.repartition(args.num_parts, "part_id")
-            .mapInArrow(_extract_batches, EXTRACT_SCHEMA)
-            .write.format("noop")
-            .mode("overwrite")
-            .save()
-        )
+        extract_stage(df, args.num_parts, bucket).write.format("noop").mode(
+            "overwrite"
+        ).save()
         wall = time.monotonic() - t0
         results[label] = {
             "wall": wall,

@@ -18,6 +18,7 @@ from ocr_spark.pipeline import (
     read_extracted,
     read_lineage,
     run_pipeline,
+    run_pipeline_snapshots,
     turn_checksum,
     with_part_id,
 )
@@ -130,12 +131,13 @@ def test_salting_splits_long_conversations(spark, tmp_path):
     assert got["extracted_text"].tolist() == want["extracted_text"].tolist()
 
 
-def test_turn_range_filter(spark, corpus, tmp_path):
+@pytest.mark.parametrize(
+    "runner", [run_pipeline, run_pipeline_snapshots], ids=lambda f: f.__name__
+)
+def test_turn_range_filter(spark, corpus, tmp_path, runner):
     path, pdf = corpus
     out = str(tmp_path / "out")
-    got = _sorted_pdf(
-        run_pipeline(spark, path, out, num_parts=8, start_turn=2, end_turn=5)
-    )
+    got = _sorted_pdf(runner(spark, path, out, num_parts=8, start_turn=2, end_turn=5))
     sub = pdf[(pdf["turn_idx"] >= 2) & (pdf["turn_idx"] <= 5)]
     want = oracle_extract(sub)
     assert got["extracted_text"].tolist() == want["extracted_text"].tolist()
@@ -165,8 +167,16 @@ def test_assemble_matches_oracle(spark, corpus, tmp_path):
 
 
 def test_extract_stage_plan_has_single_exchange(spark, corpus):
-    """One shuffle (the explicit salted repartition), no more."""
+    """One shuffle (the explicit salted repartition), no more — also with
+    the resume anti-join, whose finished side is broadcast."""
     path, _ = corpus
     df = extract_stage(spark.read.parquet(path), num_parts=16)
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert plan.count("Exchange") == 1
+
+    finished = spark.createDataFrame([(0,), (3,)], "part_id int")
+    df = extract_stage(spark.read.parquet(path), num_parts=16, finished=finished)
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("Exchange") - plan.count("BroadcastExchange") == 1
+    assert plan.count("Exchange hashpartitioning(part_id") == 1
+    assert "BroadcastHashJoin" in plan and "LeftAnti" in plan

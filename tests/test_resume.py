@@ -3,12 +3,22 @@ output equals a single-shot run (BASELINE.json north_rule)."""
 
 from __future__ import annotations
 
+import os
+
 import pandas as pd
 import pytest
+from pyspark.errors import AnalysisException
 from pyspark.sql import functions as F
 
 from ocr_spark.fixtures import make_transcripts
-from ocr_spark.pipeline import read_extracted, read_lineage, run_pipeline
+from ocr_spark.pipeline import (
+    read_extracted,
+    read_extracted_table,
+    read_lineage,
+    read_lineage_table,
+    run_pipeline,
+    run_pipeline_snapshots,
+)
 
 
 @pytest.fixture(scope="module")
@@ -28,28 +38,48 @@ def _canon(df) -> pd.DataFrame:
     )
 
 
-def test_kill_and_resume_is_identical(spark, corpus, tmp_path):
+@pytest.mark.parametrize(
+    "run, read_data, read_lin",
+    [
+        (run_pipeline, read_extracted, read_lineage),
+        (run_pipeline_snapshots, read_extracted_table, read_lineage_table),
+    ],
+    ids=["run_pipeline", "run_pipeline_snapshots"],
+)
+def test_kill_and_resume_is_identical(spark, corpus, tmp_path, run, read_data, read_lin):
     path, _ = corpus
     full_out = str(tmp_path / "full")
-    run_pipeline(spark, path, full_out, num_parts=16)
-    full = _canon(read_extracted(spark, full_out))
-    all_parts = sorted(
-        read_lineage(spark, full_out).toPandas()["part_id"].tolist()
-    )
+    run(spark, path, full_out, num_parts=16)
+    full = _canon(read_data(spark, full_out))
+    all_parts = sorted(read_lin(spark, full_out).toPandas()["part_id"].tolist())
 
     # simulate a job killed after processing only the first k parts
     partial_out = str(tmp_path / "partial")
     k = len(all_parts) // 2
-    run_pipeline(spark, path, partial_out, num_parts=16, only_parts=all_parts[:k])
-    done = read_lineage(spark, partial_out).toPandas()
+    run(spark, path, partial_out, num_parts=16, only_parts=all_parts[:k])
+    done = read_lin(spark, partial_out).toPandas()
     assert sorted(done["part_id"]) == all_parts[:k]
 
     # resume: only unfinished parts run, appended to the same output
-    run_pipeline(spark, path, partial_out, num_parts=16, resume=True)
-    lin = read_lineage(spark, partial_out).toPandas()
+    run(spark, path, partial_out, num_parts=16, resume=True)
+    lin = read_lin(spark, partial_out).toPandas()
     assert sorted(lin["part_id"]) == all_parts  # each part exactly once
-    resumed = _canon(read_extracted(spark, partial_out))
+    resumed = _canon(read_data(spark, partial_out))
     pd.testing.assert_frame_equal(resumed, full)
+
+
+def test_resume_refuses_to_overwrite_foreign_output(spark, corpus, tmp_path):
+    """Resume falls back to a fresh (overwriting) run only when nothing was
+    committed at the output; a committed dataset that is not a pipeline
+    output makes it raise and stay as it was."""
+    path, _ = corpus
+    out = str(tmp_path / "foreign")
+    spark.range(10).write.parquet(out)
+    files = sorted(os.listdir(out))
+    with pytest.raises(AnalysisException):
+        run_pipeline(spark, path, out, num_parts=8, resume=True)
+    assert sorted(os.listdir(out)) == files
+    assert spark.read.parquet(out).count() == 10
 
 
 def test_resume_after_everything_done_is_noop(spark, corpus, tmp_path):
