@@ -6,9 +6,11 @@ Dataflow (SURVEY.md §3.4):
     extract_stage, the one place the plan is built:
       → part_id = pmod(xxhash64(conv_id, floor(turn_idx/BUCKET)), P)
       → optional resume anti-join / only_parts filter (skip logical parts)
-      → repartition(P, part_id)             (explicit SALTED repartition:
-                                             the turn bucket splits long
-                                             conversations across parts)
+      → repartitionById onto ~2×cores tasks, contiguous part blocks
+                                            (no second hash: task t runs parts
+                                             [t·P/T, (t+1)·P/T); the turn
+                                             bucket splits long conversations
+                                             across parts)
       → ONE fused mapInArrow stage: route(html|grid|json|text) → extract
         → clean → serialize, emitting per-logical-part LINEAGE rows in-band
     run_pipeline / run_pipeline_snapshots: find committed parts, then write
@@ -54,9 +56,10 @@ from ocr_spark.kernels.extract import (
 )
 from ocr_spark.operators.relational import anti_join_unfinished
 
-#: Default number of logical resume partitions; at 10^12 turns this would be
-#: sized to ~1-4 GB of input per part (e.g. 2^17 parts), here sized for
-#: local[32] with ≥4x parts per core at the bench scale.
+#: Default number of logical resume parts: purely the resume granularity
+#: (a finished part is never redone). At 10^12 turns this would be sized to
+#: ~1-4 GB of input per part (e.g. 2^17 parts). It does not set the task
+#: count: extract_stage packs contiguous blocks of parts onto ~2×cores tasks.
 DEFAULT_NUM_PARTS = 256
 #: Turns per salt bucket: conversations longer than this are split across
 #: logical parts, defusing long-conversation skew.
@@ -171,7 +174,8 @@ def _extract_batch_frame(pdf: pd.DataFrame) -> pd.DataFrame:
     Pass-through tools (plain text — the majority class in a transcript
     corpus) are handled with pandas string ops on the whole column; only
     the payload-parsing tools (html/grid/json) call the per-document
-    kernels, over just their row subsets.
+    kernels, over just their row subsets. Each kernel call's wall time is
+    kept per row (``_kernel_s``) so lineage can charge it to its own part.
     """
     n = len(pdf)
     text = pdf["text"].astype("object")
@@ -182,6 +186,7 @@ def _extract_batch_frame(pdf: pd.DataFrame) -> pd.DataFrame:
     n_cols = np.zeros(n, dtype=np.int32)
     status = np.empty(n, dtype=object)
     retries = np.zeros(n, dtype=np.int64)
+    kernel_s = np.zeros(n, dtype=np.float64)
 
     parse_mask = np.isin(tool, (TOOL_HTML, TOOL_GRID, TOOL_JSON, TOOL_FLAKY))
 
@@ -195,7 +200,9 @@ def _extract_batch_frame(pdf: pd.DataFrame) -> pd.DataFrame:
 
     # payload-parsing tools: per-document kernels on their subsets
     for idx in np.flatnonzero(parse_mask):
+        t = time.perf_counter()
         rec = extract_turn(text.iloc[idx], tool[idx])
+        kernel_s[idx] = time.perf_counter() - t
         ext[idx] = rec["extracted_text"]
         n_rows[idx] = rec["n_rows"]
         n_cols[idx] = rec["n_cols"]
@@ -214,6 +221,7 @@ def _extract_batch_frame(pdf: pd.DataFrame) -> pd.DataFrame:
             "n_cols": n_cols,
             "status": status,
             "_retries": retries,
+            "_kernel_s": kernel_s,
         }
     )
 
@@ -222,13 +230,16 @@ def _extract_batches(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBat
     """The fused extraction kernel: one Arrow batch in, one out, plus one
     lineage row per logical part at end-of-partition.
 
-    Per-part lineage stats (turn range, wrapping-sum checksum, error count)
-    are accumulated with vectorized pandas groupby aggregates per batch and
-    merged across batches — no per-row Python outside the payload kernels.
+    Per-part lineage stats (turn range, wrapping-sum checksum, error count,
+    time) are accumulated with vectorized pandas groupby aggregates per batch
+    and merged across batches — no per-row Python outside the payload
+    kernels. A task runs a block of several parts, so ``duration_ms`` is each
+    part's own time: its turns' kernel calls, plus the rest of each batch's
+    time (Arrow↔pandas, pass-through, checksums) shared out by row count.
     """
-    start = time.monotonic()
     acc: dict[int, list[Any]] = {}
     for batch in batches:
+        t0 = time.perf_counter()
         pdf = batch.to_pandas()
         out = _extract_batch_frame(pdf)
 
@@ -243,8 +254,14 @@ def _extract_batches(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBat
             checksum=("_ck", lambda s: int(np.add.reduce(s.to_numpy(np.uint64)))),
             error_count=("_err", "sum"),
             retry_count=("_retries", "sum"),
+            kernel_s=("_kernel_s", "sum"),
         )
+        kernel_total = float(out["_kernel_s"].sum())
+        out = out.drop(columns=["_ck", "_err", "_retries", "_kernel_s"])
+        rb = pa.RecordBatch.from_pandas(out, schema=_ARROW_SCHEMA, preserve_index=False)
+        shared_per_row = (time.perf_counter() - t0 - kernel_total) / max(1, len(out))
         for pid, row in grp.iterrows():
+            secs = float(row["kernel_s"]) + shared_per_row * int(row["n_turns"])
             st = acc.get(int(pid))
             if st is None:
                 acc[int(pid)] = [
@@ -256,6 +273,7 @@ def _extract_batches(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBat
                     int(row["checksum"]) & ((1 << 64) - 1),
                     int(row["error_count"]),
                     int(row["retry_count"]),
+                    secs,
                 ]
             else:
                 st[0] = min(st[0], row["conv_min"])
@@ -266,46 +284,29 @@ def _extract_batches(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBat
                 st[5] = (st[5] + int(row["checksum"])) & ((1 << 64) - 1)
                 st[6] += int(row["error_count"])
                 st[7] += int(row["retry_count"])
-
-        out = out.drop(columns=["_ck", "_err", "_retries"])
-        yield pa.RecordBatch.from_pandas(
-            out, schema=_ARROW_SCHEMA, preserve_index=False
-        )
-    stats = {
-        pid: {
-            "conv_min": st[0],
-            "conv_max": st[1],
-            "turn_min": st[2],
-            "turn_max": st[3],
-            "n_turns": st[4],
-            "checksum": st[5],
-            "error_count": st[6],
-            "retry_count": st[7],
-        }
-        for pid, st in acc.items()
-    }
-    if stats:
-        duration_ms = int((time.monotonic() - start) * 1000)
+                st[8] += secs
+        yield rb
+    if acc:
+        pids = sorted(acc)
         lineage_rows = [
             json.dumps(
                 {
                     "part_id": pid,
-                    "conv_min": st["conv_min"],
-                    "conv_max": st["conv_max"],
-                    "turn_min": st["turn_min"],
-                    "turn_max": st["turn_max"],
-                    "n_turns": st["n_turns"],
-                    "checksum": f"{st['checksum']:016x}",
-                    "duration_ms": duration_ms,
-                    "error_count": st["error_count"],
-                    "retry_count": st["retry_count"],
+                    "conv_min": st[0],
+                    "conv_max": st[1],
+                    "turn_min": st[2],
+                    "turn_max": st[3],
+                    "n_turns": st[4],
+                    "checksum": f"{st[5]:016x}",
+                    "duration_ms": round(st[8] * 1000),
+                    "error_count": st[6],
+                    "retry_count": st[7],
                     "status": "ok",
                 },
                 sort_keys=True,
             )
-            for pid, st in sorted(stats.items())
+            for pid, st in sorted(acc.items())
         ]
-        pids = sorted(stats)
         k = len(pids)
         yield pa.RecordBatch.from_pydict(
             {
@@ -367,7 +368,15 @@ def extract_stage(
     the logical parts an earlier run committed; ``only_parts`` keeps just
     the listed parts (used by tests to simulate a job killed after k
     partitions).
+
+    The logical parts run on ``min(num_parts, 2 × defaultParallelism)``
+    tasks, each a contiguous block of part ids, assigned directly (no second
+    hash): no task is empty when parts ≥ tasks, and the fixed per-task
+    Python cost is paid ~2×cores times, not once per part. Lineage does not
+    depend on this mapping, and part ids are uniform hashes, so the salting
+    still spreads hot conversations across tasks.
     """
+    n_tasks = min(num_parts, 2 * df.sparkSession.sparkContext.defaultParallelism)
     df = with_part_id(df, num_parts, turn_bucket)
     if finished is not None:
         df = anti_join_unfinished(df, finished, "part_id")
@@ -377,7 +386,9 @@ def extract_stage(
         # prune to the kernel's columns BEFORE the shuffle: ts (and any
         # extra user columns) never cross the exchange or the Python worker
         df.select("part_id", "conv_id", "turn_idx", "text", "tool")
-        .repartition(num_parts, "part_id")
+        .repartitionById(
+            n_tasks, F.expr(f"CAST(CAST(part_id AS BIGINT) * {n_tasks} DIV {num_parts} AS INT)")
+        )
         .mapInArrow(_extract_batches, EXTRACT_SCHEMA)
     )
 

@@ -6,13 +6,17 @@ from __future__ import annotations
 
 import json
 
+import numpy as np
 import pandas as pd
+import pyarrow as pa
 import pytest
 from pyspark.sql import functions as F
 
+from ocr_spark import table as tbl
 from ocr_spark.fixtures import make_transcripts
 from ocr_spark.oracle import oracle_assemble, oracle_extract
 from ocr_spark.pipeline import (
+    _extract_batches,
     assemble_conversations,
     extract_stage,
     read_extracted,
@@ -20,6 +24,7 @@ from ocr_spark.pipeline import (
     run_pipeline,
     run_pipeline_snapshots,
     turn_checksum,
+    turn_checksums,
     with_part_id,
 )
 
@@ -178,5 +183,83 @@ def test_extract_stage_plan_has_single_exchange(spark, corpus):
     df = extract_stage(spark.read.parquet(path), num_parts=16, finished=finished)
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert plan.count("Exchange") - plan.count("BroadcastExchange") == 1
-    assert plan.count("Exchange hashpartitioning(part_id") == 1
+    assert plan.count("direct_shuffle_partition_id(cast(((cast(part_id#") == 1
     assert "BroadcastHashJoin" in plan and "LeftAnti" in plan
+
+
+def test_parts_run_as_contiguous_blocks_on_2x_cores_tasks(spark, corpus):
+    """Logical parts (the resume unit) are decoupled from physical tasks:
+    64 parts run on min(64, 2 × cores) tasks, none empty, each a contiguous
+    part_id block — and lineage is what the driver computes from the input
+    alone, whatever the part → task map."""
+    path, pdf = corpus
+    out = extract_stage(spark.read.parquet(path), 64)
+    n_tasks = min(64, 2 * spark.sparkContext.defaultParallelism)
+    blocks = (
+        out.filter(F.col("rec") == "data")
+        .groupBy(F.spark_partition_id().alias("task"))
+        .agg(F.min("part_id").alias("lo"), F.max("part_id").alias("hi"))
+        .orderBy("lo")
+        .toPandas()
+    )
+    assert len(blocks) == n_tasks
+    # contiguous: the tasks' [lo, hi] part ranges do not interleave
+    assert (blocks["hi"].to_numpy()[:-1] < blocks["lo"].to_numpy()[1:]).all()
+
+    lin = pd.DataFrame(
+        [
+            json.loads(r["extracted_text"])
+            for r in out.filter(F.col("rec") == "lineage").collect()
+        ]
+    )
+    parts = with_part_id(spark.read.parquet(path), 64).select(
+        "conv_id", "turn_idx", "part_id"
+    ).toPandas()
+    want = oracle_extract(pdf).merge(parts, on=["conv_id", "turn_idx"])
+    want["ck"] = turn_checksums(want["conv_id"], want["turn_idx"], want["extracted_text"])
+    want = want.groupby("part_id").agg(
+        n_turns=("ck", "size"),
+        checksum=("ck", lambda s: f"{int(np.add.reduce(s.to_numpy(np.uint64))):016x}"),
+    )
+    got = lin.set_index("part_id")[["n_turns", "checksum"]].sort_index()
+    pd.testing.assert_frame_equal(
+        got, want, check_names=False, check_dtype=False, check_index_type=False
+    )
+
+
+def test_snapshot_manifest_pruning_is_selective(spark, corpus, tmp_path):
+    """Contiguous part blocks per task give data files disjoint
+    [part_min, part_max] stats, so part_ids pruning keeps one file."""
+    path, _ = corpus
+    root = str(tmp_path / "t")
+    run_pipeline_snapshots(spark, path, root, num_parts=64)
+    files = sorted(
+        (f for f in tbl.read_snapshot(root)["files"] if "part_min" in f),
+        key=lambda f: f["part_min"],
+    )
+    assert len(files) > 1
+    for a, b in zip(files, files[1:]):
+        assert a["part_max"] < b["part_min"]
+    p = files[len(files) // 2]["part_min"]
+    pruned = tbl.read_table(spark, root, part_ids=[p])
+    assert len(pruned.inputFiles()) == 1
+    assert pruned.filter(F.col("part_id") == p).count() > 0
+
+
+def test_duration_ms_is_per_part_within_one_task():
+    """One task holding a grid-only part and a plain-text-only part charges
+    each its own time: the grid kernel's cost lands on the grid part."""
+    pdf = make_transcripts(n_convs=80, seed=3)
+    grid = pdf[pdf["tool"] == "grid"].head(60).assign(part_id=np.int32(0))
+    plain = pdf[pdf["tool"] == "null"].head(60).assign(part_id=np.int32(1))
+    both = pd.concat([grid, plain]).sort_values(["conv_id", "turn_idx"])
+    cols = ["part_id", "conv_id", "turn_idx", "text", "tool"]
+    table = pa.Table.from_pandas(both[cols], preserve_index=False)
+    out = pa.Table.from_batches(list(_extract_batches(iter(table.to_batches(40)))))
+    lin = {
+        r["part_id"]: json.loads(r["extracted_text"])
+        for r in out.to_pylist()
+        if r["rec"] == "lineage"
+    }
+    assert lin[0]["n_turns"] == lin[1]["n_turns"] == 60
+    assert lin[0]["duration_ms"] > lin[1]["duration_ms"]

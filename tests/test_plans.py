@@ -80,7 +80,7 @@ def test_extract_stage_exchanges_on_salted_part_id(spark):
 
     df = spark.createDataFrame(make_transcripts(n_convs=5, seed=7))
     plan = _plan(extract_stage(df, num_parts=8))
-    assert "hashpartitioning(part_id" in plan
+    assert "direct_shuffle_partition_id(cast(((cast(part_id#" in plan
     assert "MapInArrow" in plan
     # ts is pruned before the exchange: the shuffled row is the kernel's
     # 6 columns, not the full input row (column refs print as `name#id`)
