@@ -553,67 +553,33 @@ def duplicate_clusters(
     id_col: str = "doc_id",
     num_hashes: int = DEFAULT_NUM_HASHES,
     band_size: int = DEFAULT_BAND_SIZE,
-    max_iters: int = 10,
 ) -> DataFrame:
     """Connected-components duplicate clustering: every doc labeled with
     the MIN doc_id of its near-duplicate component (VERIFIED LSH pairs as
     edges — see verified_dup_pairs; singletons keep their own id).
 
-    Iterative min-label propagation — each round is one join + one
-    keyed min-aggregate, both distributed; the driver sees ONE scalar per
-    round (the label sum, which strictly decreases until fixpoint, so
-    equality = convergence). Near-dup components are near-cliques with
-    tiny diameters, so 2-3 rounds converge in practice; ``max_iters``
-    bounds the worst case (a path graph). Deterministic under any
-    partitioning — labels are mins, never first-seen."""
+    The closure is :func:`graph.connected_components`: min-label
+    propagation run to its fixpoint, one distributed join + keyed
+    min-aggregate per round, so any chain length converges.
+    Deterministic under any partitioning — labels are mins, never
+    first-seen."""
+    from ocr_spark.operators.graph import connected_components
+
     caches: list[DataFrame] = []
     pairs = verified_dup_pairs(
         df, threshold, text_col, id_col, num_hashes, band_size, caches=caches
     )
-    edges = pairs.select(
-        F.col("a").alias("src"), F.col("b").alias("dst")
-    ).unionByName(pairs.select(F.col("b").alias("src"), F.col("a").alias("dst")))
-    edges = edges.persist()
-    labels = df.select(F.col(id_col).alias("doc_id")).distinct().withColumn(
-        "cluster_id", F.col("doc_id")
-    ).persist()
-    prev_sum = labels.agg(F.sum("cluster_id")).first()[0]
-    converged = False
-    for _ in range(max_iters):
-        prop = (
-            edges.join(labels, edges.src == labels.doc_id)
-            .select(F.col("dst").alias("doc_id"), "cluster_id")
+    try:
+        labels = connected_components(
+            pairs.select(F.col("a").alias("src"), F.col("b").alias("dst")),
+            df.select(F.col(id_col).alias("id")),
         )
-        new_labels = (
-            labels.unionByName(prop)
-            .groupBy("doc_id")
-            .agg(F.min("cluster_id").alias("cluster_id"))
-            .persist()
-        )
-        new_sum = new_labels.agg(F.sum("cluster_id")).first()[0]
-        labels.unpersist()
-        labels = new_labels
-        if new_sum == prev_sum:
-            converged = True
-            break
-        prev_sum = new_sum
-    edges.unpersist()
-    for c in caches:  # band/shingle caches from the pair build
-        c.unpersist()
-    if not converged:
-        # a non-fixpoint labeling is WRONG (it is not the transitive
-        # closure, and silently differs from the recursive-CTE oracle) —
-        # fail loudly; callers with genuinely deep components (diameter >
-        # max_iters, e.g. a chain of pairwise-similar docs) raise the
-        # budget instead of consuming a partial answer
-        labels.unpersist()
-        raise RuntimeError(
-            f"duplicate_clusters: min-label propagation did not converge "
-            f"within max_iters={max_iters} rounds; raise max_iters"
-        )
-    # the labels frame stays persisted for the caller's action; release
-    # follows the handle's lifetime
-    return _own_caches(labels, [labels])
+    finally:
+        for c in caches:  # band/shingle caches from the pair build
+            c.unpersist()
+    return labels.select(
+        F.col("id").alias("doc_id"), F.col("label").alias("cluster_id")
+    )
 
 
 def embedding_cosine_dedup_lsh(

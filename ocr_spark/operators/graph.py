@@ -3,10 +3,11 @@ the crawl-frontier / source-weighting side of a training-data pipeline
 (PageRank-weighted domain sampling is the classic quality prior for
 web text; see Page et al. 1999, and Common Crawl's host-level ranks).
 
-Everything is integer micro-unit arithmetic with a FIXED iteration
-count, so the DuckDB oracle replays the exact values by textually
-unrolling the same iterations (the k-means / IVF precedent in
-operators/similarity.py).
+PageRank and HITS are integer micro-unit arithmetic with a FIXED
+iteration count, so the DuckDB oracle replays the exact values by
+textually unrolling the same iterations (the k-means / IVF precedent in
+operators/similarity.py). :func:`connected_components` instead runs to
+its fixpoint; its oracles are recursive CTEs.
 
 Reference parity note: the reference repo (a single-document OCR
 script) has no corpus-level graph pass; this is builder-brief breadth
@@ -15,7 +16,7 @@ for the 100 TB training-data pipeline surface.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 #: PageRank damping factor as an exact rational: 0.85 = DAMP_NUM/DAMP_DEN.
@@ -221,3 +222,55 @@ def oracle_hits_sql(edges_cte: str, iters: int = HITS_ITERS) -> str:
         f" JOIN h{iters} ON a{iters}.node = h{iters}.node"
     )
     return "".join(parts)
+
+
+def connected_components(pairs: DataFrame, ids: DataFrame) -> DataFrame:
+    """Connected components of the undirected graph on ``ids`` (one
+    column ``id``, every pair endpoint among them) with edges ``pairs``
+    (columns ``src``, ``dst``): one ``(id, label)`` row per distinct id,
+    ``label`` the MIN id of its component, so isolated ids keep their
+    own.  Any orderable id type works (long, string); the result is
+    deterministic under any partitioning, because labels are mins.
+
+    Min-label propagation to a fixpoint.  One round is one action: the
+    labels join the symmetric edges on src, union with the current
+    labels, and one keyed aggregate takes ``min(label)`` while carrying
+    each node's old label as ``max(old)``; an ``Observation`` counts
+    the changed labels on the eager ``localCheckpoint`` that
+    materializes the round and cuts its plan.  The only exit is a round
+    that changes nothing, so a partial closure is never returned and
+    the loop ends within (largest component diameter + 1) rounds.
+
+    Trade-off: ``localCheckpoint`` blocks are not recomputed after an
+    executor is lost (persisted labels would be); the job fails
+    instead."""
+    edges = (
+        pairs.select("src", "dst")
+        .unionByName(
+            pairs.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
+        )
+        .persist()
+    )
+    labels = ids.select("id", F.col("id").alias("label")).distinct()
+    try:
+        while True:
+            prop = edges.join(labels, edges.src == labels.id).select(
+                F.col("dst").alias("id"), "label"
+            )
+            changed = Observation()
+            labels = (
+                labels.select("id", "label", F.col("label").alias("old"))
+                .unionByName(prop, allowMissingColumns=True)
+                .groupBy("id")
+                .agg(F.min("label").alias("label"), F.max("old").alias("old"))
+                .observe(
+                    changed,
+                    F.count_if(F.col("label") != F.col("old")).alias("n"),
+                )
+                .localCheckpoint()
+                .select("id", "label")
+            )
+            if changed.get["n"] == 0:
+                return labels
+    finally:
+        edges.unpersist()

@@ -1247,81 +1247,34 @@ def conversation_clusters(
     band_size: int = NEAR_DUP_BAND_SIZE,
     min_jaccard_e6: int = NEAR_DUP_MIN_JACCARD_E6,
     max_bucket: int = NEAR_DUP_MAX_BUCKET,
-    max_iters: int = 8,
 ) -> DataFrame:
     """The fuzzy-dedup funnel end: connect the verified near-dup pairs
-    (:func:`near_dup_conversations`) into components by iterative
-    min-label propagation and elect one KEEPER per cluster — the
-    conversation with the most turns (near-dups are typically
-    truncated or re-exported copies, so the longest transcript is the
-    most complete), ties on conv_id asc.  Singletons keep themselves.
+    (:func:`near_dup_conversations`) into components with
+    :func:`graph.connected_components` (min-label propagation run to
+    its fixpoint, so any chain length converges) and elect one KEEPER
+    per cluster — the conversation with the most turns (near-dups are
+    typically truncated or re-exported copies, so the longest
+    transcript is the most complete), ties on conv_id asc.  Singletons
+    keep themselves.
 
-    Each propagation round is one join + one keyed min-aggregate, both
-    distributed; the driver sees ONE scalar per round (the count of
-    changed labels — zero = fixpoint; label sums don't exist for
-    string ids).  Near-dup components are near-cliques, so 2-3 rounds
-    converge; a non-fixpoint labeling is WRONG (not the transitive
-    closure) and raises rather than returning silently.
-
-    Scale shape: the edge frame is pairs-sized (persisted), the label
-    frame is one row per CONVERSATION, and every round shuffles only
-    (conv_id, label) — text is gone before the first iteration."""
+    Scale shape: the edge frame is pairs-sized, the label frame is one
+    row per CONVERSATION, and every round shuffles only (conv_id,
+    label) — text is gone before the first round."""
     from ocr_spark.operators.dedup import _own_caches
+    from ocr_spark.operators.graph import connected_components
 
     pairs = near_dup_conversations(
         turns, num_hashes, band_size, min_jaccard_e6, max_bucket
-    )
-    edges = (
-        pairs.select(F.col("conv_a").alias("src"), F.col("conv_b").alias("dst"))
-        .unionByName(
-            pairs.select(
-                F.col("conv_b").alias("src"), F.col("conv_a").alias("dst")
-            )
-        )
-        .persist()
     )
     stats = (
         turns.groupBy("conv_id")
         .agg(F.count(F.lit(1)).cast("bigint").alias("n_turns"))
         .persist()
     )
-    labels = stats.select(
-        "conv_id", F.col("conv_id").alias("cluster_id")
-    ).persist()
-    converged = False
-    for _ in range(max_iters):
-        prop = edges.join(
-            labels, edges.src == labels.conv_id
-        ).select(F.col("dst").alias("conv_id"), "cluster_id")
-        new_labels = (
-            labels.unionByName(prop)
-            .groupBy("conv_id")
-            .agg(F.min("cluster_id").alias("cluster_id"))
-            .persist()
-        )
-        changed = (
-            new_labels.join(
-                labels.withColumnRenamed("cluster_id", "__old"), "conv_id"
-            )
-            .filter(F.col("cluster_id") != F.col("__old"))
-            .count()
-        )
-        labels.unpersist()
-        labels = new_labels
-        if changed == 0:
-            converged = True
-            break
-    edges.unpersist()
-    # pairs' shingle/band caches release with its handle (kept alive
-    # through the loop above by this frame reference)
-    del pairs
-    if not converged:
-        labels.unpersist()
-        stats.unpersist()
-        raise RuntimeError(
-            "conversation_clusters: min-label propagation did not "
-            f"converge within max_iters={max_iters} rounds"
-        )
+    labels = connected_components(
+        pairs.select(F.col("conv_a").alias("src"), F.col("conv_b").alias("dst")),
+        stats.select(F.col("conv_id").alias("id")),
+    ).select(F.col("id").alias("conv_id"), F.col("label").alias("cluster_id"))
     w = Window.partitionBy("cluster_id").orderBy(
         F.desc("n_turns"), F.asc("conv_id")
     )
@@ -1335,7 +1288,7 @@ def conversation_clusters(
             (F.col("__rn") == 1).alias("is_keeper"),
         )
     )
-    return _own_caches(out, [labels, stats])
+    return _own_caches(out, [stats])
 
 
 def merge_role_runs(turns: DataFrame) -> DataFrame:

@@ -153,9 +153,11 @@ def main() -> int:
         ),
         (
             "Duplicate clustering round (`duplicate_clusters`, one iteration)",
-            "Each min-label propagation round = one join (edges × labels) + one "
-            "keyed min-aggregate, both distributed; the driver receives a single "
-            "scalar (label sum) per round for the convergence check. Shown here: "
+            "Each min-label propagation round of `graph.connected_components` = "
+            "one join (edges × labels) + one keyed min-aggregate, both "
+            "distributed; an Observation on the round's eager localCheckpoint "
+            "counts the changed labels, and a round that changes none ends the "
+            "loop. Shown here: "
             "the verified-pair edge build feeding round 1 — LSH candidates joined "
             "to per-doc shingle arrays (computed once, by id) for the mandatory "
             "Jaccard verify.",

@@ -544,6 +544,101 @@ def test_duplicate_clusters_transitive_min_label(spark):
     assert out[3] == 3 and out[4] == 4  # singletons keep their own id
 
 
+def test_duplicate_clusters_ids_near_int64_max(spark):
+    # ids whose sum passes 2^63: the closure must not add ids up (an
+    # ANSI-mode ARITHMETIC_OVERFLOW), only compare them
+    big = 2**62
+    text = "the same long sentence about parquet files and arrow batches"
+    df = spark.createDataFrame(
+        [(big, text), (big + 1, text), (big + 2, "an unrelated short note")],
+        "doc_id long, text string",
+    )
+    out = {tuple(r) for r in dedup.duplicate_clusters(df).collect()}
+    assert out == {(big, big), (big + 1, big), (big + 2, big + 2)}
+
+
+def _union_find_labels(ids, pairs):
+    parent = {i: i for i in ids}
+
+    def find(x):
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in pairs:
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)  # root = component min
+    return {i: find(i) for i in ids}
+
+
+def _components(spark, ids, pairs, id_type):
+    from ocr_spark.operators import graph
+
+    out = graph.connected_components(
+        spark.createDataFrame(pairs, f"src {id_type}, dst {id_type}"),
+        spark.createDataFrame([(i,) for i in ids], f"id {id_type}"),
+    )
+    rows = out.collect()
+    assert len(rows) == len(ids)  # one row per distinct id
+    return {r.id: r.label for r in rows}
+
+
+def _graph_cases(id_strategy):
+    from hypothesis import strategies as st
+
+    # random edge lists over the drawn ids: self-loops, duplicate and
+    # reversed pairs all occur; ids no pair touches stay isolated
+    def with_pairs(ids):
+        idx = st.integers(0, len(ids) - 1)
+        edges = st.lists(st.tuples(idx, idx), max_size=2 * len(ids))
+        return edges.map(lambda e: (ids, [(ids[a], ids[b]) for a, b in e]))
+
+    return st.lists(id_strategy, unique=True, max_size=12).flatmap(
+        lambda ids: with_pairs(ids) if ids else st.just((ids, []))
+    )
+
+
+@pytest.mark.parametrize("id_type", ["long", "string"])
+def test_connected_components_matches_union_find(spark, id_type):
+    from hypothesis import example, given, settings
+    from hypothesis import strategies as st
+
+    if id_type == "long":
+        ids = st.integers(-(2**63), 2**63 - 1)
+        a, b, c, d = 2**63 - 1, 2**63 - 2, -(2**63), 0
+    else:
+        ids = st.text(st.characters(blacklist_categories=("Cs",)), max_size=4)
+        a, b, c, d = "b", "a", "", "zz"
+    # pinned: the empty graph, and a self-loop, a duplicated and a
+    # reversed pair beside an isolated id
+    pinned = ([a, b, c, d], [(a, a), (a, b), (b, a), (a, b), (c, a)])
+
+    @settings(max_examples=12, deadline=None)
+    @example(([], []))
+    @example(pinned)
+    @given(_graph_cases(ids))
+    def check(case):
+        node_ids, pairs = case
+        got = _components(spark, node_ids, pairs, id_type)
+        assert got == _union_find_labels(node_ids, pairs)
+
+    check()
+
+
+def test_connected_components_long_chain_converges(spark):
+    # a randomly numbered 40-hop path: min-label propagation needs one
+    # round per hop from the min id, far past any old round cap
+    import random
+
+    ids = list(range(1000, 1041))
+    random.Random(7).shuffle(ids)
+    pairs = list(zip(ids, ids[1:]))
+    got = _components(spark, ids, pairs, "long")
+    assert got == {i: 1000 for i in ids}
+
+
 def test_ann_recall_vs_exact_baseline(spark):
     # quality telemetry: approximate ANN must recover a healthy share of
     # the exact top-3 on the deterministic test corpus (low-cosine regime
