@@ -7,7 +7,12 @@ Usage:
         [--start-turn N] [--end-turn M] [--resume] [--only-parts 0,1,2]
 
 Prints one JSON summary line on success: rows extracted, parts completed,
-error count, wall seconds, turns/sec.
+error count, wall seconds, turns/sec, per-part duration p50/max and a
+log2-ms histogram (``pipeline.summary_metrics``), and with ``--assemble``
+the span count. The summary covers THIS run only: it is observed on the
+run's own writes, never read back, so a ``--resume`` run counts just the
+parts it processed. The lineage table stays the durable record of every
+committed part.
 """
 
 from __future__ import annotations
@@ -18,10 +23,12 @@ import os
 import sys
 import time
 
-from pyspark.sql import SparkSession
+from pyspark.sql import Observation, SparkSession
 from pyspark.sql import functions as F
 
 
+# Not used by main, whose histogram is observed on the write
+# (pipeline.summary_metrics); kept for callers that hold a lineage table.
 def part_duration_hist(lineage, lo: int, hi: int, nbuckets: int = 8) -> dict:
     """Equi-width histogram of per-part ``duration_ms`` over [lo, hi].
 
@@ -74,7 +81,8 @@ def main(argv: list[str] | None = None) -> int:
         action="store_true",
         help="after extraction, also write the per-conversation combined "
         "tables (reference schema_align_union) as long spans to "
-        "<output>_assembled via the grouped-map assembly",
+        "<output>_assembled (one exchange on conv_id, then one sorted "
+        "Arrow map)",
     )
     p.add_argument(
         "--export",
@@ -98,11 +106,7 @@ def main(argv: list[str] | None = None) -> int:
     from ocr_spark import pipeline
 
     # the output layout is the one choice: how parts are committed and read
-    run, read_lineage = (
-        (pipeline.run_pipeline_snapshots, pipeline.read_lineage_table)
-        if args.snapshot_table
-        else (pipeline.run_pipeline, pipeline.read_lineage)
-    )
+    run = pipeline.run_pipeline_snapshots if args.snapshot_table else pipeline.run_pipeline
 
     spark = SparkSession.builder.appName("ocr_spark.job").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
@@ -118,6 +122,7 @@ def main(argv: list[str] | None = None) -> int:
     warmup_sec = time.monotonic() - t_warm
 
     t0 = time.monotonic()
+    summary = Observation("job_summary")
     extracted = run(
         spark,
         args.input,
@@ -130,34 +135,19 @@ def main(argv: list[str] | None = None) -> int:
         only_parts=(
             [int(x) for x in args.only_parts.split(",")] if args.only_parts else None
         ),
+        summary=summary,
     )
-    # Row count comes from the lineage table (one row per logical part),
-    # not a second scan over the freshly written data files.
-    lineage = read_lineage(spark, args.output)
-    lin = lineage.agg(
-        F.count("*").alias("parts"),
-        F.coalesce(F.sum("n_turns"), F.lit(0)).alias("rows"),
-        F.coalesce(F.sum("error_count"), F.lit(0)).alias("errors"),
-        F.coalesce(F.min("duration_ms"), F.lit(0)).alias("min_part_ms"),
-        F.coalesce(F.max("duration_ms"), F.lit(0)).alias("max_part_ms"),
-        F.coalesce(
-            F.percentile_approx("duration_ms", F.lit(0.5)), F.lit(0)
-        ).alias("p50_part_ms"),
-    ).first()
-    n_rows = int(lin["rows"])
-    part_hist = None
-    if lin["parts"]:
-        part_hist = part_duration_hist(
-            lineage, int(lin["min_part_ms"]), int(lin["max_part_ms"])
-        )
+    lin = summary.get
     assembled_rows = None
     if args.assemble:
-        assembled = pipeline.assemble_conversations(extracted)
         # sibling dir: the output root is a rec=...-partitioned dataset and
         # must not grow foreign subdirectories
         apath = args.output.rstrip("/") + "_assembled"
-        assembled.write.mode("overwrite").parquet(apath)
-        assembled_rows = spark.read.parquet(apath).count()
+        spans = Observation("assembled")
+        pipeline.assemble_conversations(extracted).observe(
+            spans, F.count(F.lit(1)).alias("rows")
+        ).write.mode("overwrite").parquet(apath)
+        assembled_rows = spans.get["rows"]
         if args.export:
             from ocr_spark import sinks
 
@@ -189,16 +179,16 @@ def main(argv: list[str] | None = None) -> int:
     print(
         json.dumps(
             {
-                "rows": n_rows,
+                "rows": lin["rows"],
                 "parts_done": lin["parts"],
-                "errors": int(lin["errors"]),
+                "errors": lin["errors"],
                 "wall_sec": round(wall, 2),
                 "warmup_sec": round(warmup_sec, 2),
-                "part_ms_p50": int(lin["p50_part_ms"]),
-                "part_ms_max": int(lin["max_part_ms"]),
-                "part_ms_hist": part_hist,
+                "part_ms_p50": lin["p50_ms"] or 0,
+                "part_ms_max": lin["max_ms"] or 0,
+                "part_ms_hist": list(lin["hist"]) if lin["parts"] else None,
                 "assembled_rows": assembled_rows,
-                "turns_per_sec": round(n_rows / wall, 1) if wall > 0 else None,
+                "turns_per_sec": round(lin["rows"] / wall, 1) if wall > 0 else None,
                 "output": args.output,
             }
         )

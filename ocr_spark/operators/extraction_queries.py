@@ -368,7 +368,7 @@ def null_clean_query(df: DataFrame) -> DataFrame:
     return df.select("doc_id", _clean_udf(token).alias("cleaned"))
 
 
-# -- Conversation assembly (applyInPandas grouped map) ----------------------
+# -- Conversation assembly (one sorted Arrow map) --------------------------
 
 
 @pandas_udf(T.StringType())
@@ -379,7 +379,7 @@ def _extract_json_turn_udf(s: pd.Series) -> pd.Series:
 
 
 def conversation_assembly_query(df: DataFrame) -> DataFrame:
-    """documents → synthetic conversations → the REAL applyInPandas
+    """documents → synthetic conversations → the REAL sorted-Arrow-map
     assembly (pipeline.assemble_conversations, the reference's
     schema_align_union, scripts/ExtractX_OCR.py:549-572) → long spans.
 
@@ -390,7 +390,7 @@ def conversation_assembly_query(df: DataFrame) -> DataFrame:
     align kernel must ""-fill — the §1.2 asymmetry, stated directly in
     the DuckDB oracle. Column order is first-seen ([w] then n appended at
     the first even page), row order is turn order; both deterministic, so
-    the whole grouped-map output is SQL-expressible.
+    the whole assembly output is SQL-expressible.
     """
     from ocr_spark.pipeline import assemble_conversations
 

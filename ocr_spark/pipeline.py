@@ -41,9 +41,10 @@ from typing import Any
 import numpy as np
 import pandas as pd
 import pyarrow as pa
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from ocr_spark import table as tbl
 from ocr_spark.kernels.align import align_pages
@@ -110,6 +111,41 @@ LINEAGE_JSON_SCHEMA = T.StructType(
         T.StructField("status", T.StringType()),
     ]
 )
+
+#: Log2 buckets of the summary's per-part ``duration_ms`` histogram.
+PART_MS_BUCKETS = 24
+
+
+def summary_metrics() -> list[Column]:
+    """The job summary, as aggregates over one extraction output (data and
+    lineage rows): attach them with ``DataFrame.observe`` to the write, and
+    they arrive with it, with no job of their own and no re-read.
+
+    ``parts``/``rows``/``errors`` count this output's lineage rows, data
+    rows and error turns; ``min_ms``/``max_ms``/``p50_ms`` summarize the
+    parts' ``duration_ms``; ``hist`` counts parts in ``PART_MS_BUCKETS``
+    fixed log2 buckets: bucket 0 holds 0 ms, bucket i holds
+    [2^(i-1), 2^i) ms, and the last also holds everything above.
+    """
+    lineage = F.col("rec") == "lineage"
+    ms = F.when(
+        lineage, F.from_json("extracted_text", LINEAGE_JSON_SCHEMA)["duration_ms"]
+    )
+    # bit length of ms = its log2 bucket; bin(0) is "0", so 0 ms is special
+    bucket = F.when(ms <= 0, 0).when(
+        ms > 0, F.least(F.length(F.bin(ms)), F.lit(PART_MS_BUCKETS - 1))
+    )
+    return [
+        F.count_if(lineage).alias("parts"),
+        F.count_if(F.col("rec") == "data").alias("rows"),
+        F.count_if((F.col("rec") == "data") & (F.col("status") == "error")).alias(
+            "errors"
+        ),
+        F.min(ms).alias("min_ms"),
+        F.max(ms).alias("max_ms"),
+        F.percentile_approx(ms, F.lit(0.5)).alias("p50_ms"),
+        F.array(*[F.count_if(bucket == i) for i in range(PART_MS_BUCKETS)]).alias("hist"),
+    ]
 
 
 def _esc_nul(s: pd.Series) -> pd.Series:
@@ -456,6 +492,7 @@ def run_pipeline(
     end_turn: int | None = None,
     resume: bool = False,
     only_parts: list[int] | None = None,
+    summary: Observation | None = None,
 ) -> DataFrame:
     """Run (or resume) the extraction job; returns the extracted data rows.
 
@@ -467,13 +504,16 @@ def run_pipeline(
     ``_SUCCESS`` marker); any other output that is not a pipeline output
     raises instead of being overwritten.
     ``only_parts`` restricts processing (used by tests to simulate a job
-    killed after k partitions).
+    killed after k partitions). ``summary``, if given, observes
+    :func:`summary_metrics` on this run's write.
     """
     finished = None
     if resume and _has_success_marker(spark, output_path):
         finished = _finished_parts(read_lineage(spark, output_path))
     df = read_transcripts(spark, input_path, start_turn=start_turn, end_turn=end_turn)
     out = extract_stage(df, num_parts, turn_bucket, finished=finished, only_parts=only_parts)
+    if summary is not None:
+        out = out.observe(summary, *summary_metrics())
     mode = "overwrite" if finished is None else "append"
     out.write.partitionBy("rec").mode(mode).parquet(output_path)
     return read_extracted(spark, output_path)
@@ -490,6 +530,7 @@ def run_pipeline_snapshots(
     end_turn: int | None = None,
     resume: bool = False,
     only_parts: list[int] | None = None,
+    summary: Observation | None = None,
 ) -> DataFrame:
     """run_pipeline over the snapshot table layer (ocr_spark.table).
 
@@ -498,13 +539,16 @@ def run_pipeline_snapshots(
     ever sees, and resume re-processes exactly those parts — strictly
     stronger crash semantics than the directory layout, and the Iceberg
     behavior the north_rule names. Lineage rows ride the same commit, so
-    data and its completion record become visible together.
+    data and its completion record become visible together. ``summary`` is
+    as in :func:`run_pipeline`.
     """
     finished = None
     if resume and tbl.current_snapshot_id(table_root) is not None:
         finished = _finished_parts(read_lineage_table(spark, table_root))
     df = read_transcripts(spark, input_path, start_turn=start_turn, end_turn=end_turn)
     out = extract_stage(df, num_parts, turn_bucket, finished=finished, only_parts=only_parts)
+    if summary is not None:
+        out = out.observe(summary, *summary_metrics())
     tbl.commit_append(
         spark, table_root, out, part_col="part_id", overwrite=finished is None
     )
@@ -529,41 +573,69 @@ ASSEMBLE_SCHEMA = T.StructType(
     ]
 )
 
+_ASSEMBLE_ARROW_SCHEMA = to_arrow_schema(ASSEMBLE_SCHEMA)
 
-def _assemble_group(pdf) -> Any:
-    import pandas as pd
 
-    pdf = pdf.sort_values("turn_idx")
-    pages = [
-        (lambda o: (o["columns"], o["rows"]))(json.loads(t))
-        for t, tool in zip(pdf["extracted_text"], pdf["tool"])
-        if tool in ("grid", "json")
-    ]
-    cols, rows = align_pages(pages)
-    out = []
-    conv_id = pdf["conv_id"].iloc[0]
-    for r_i, row in enumerate(rows):
-        for c_i, cell in enumerate(row):
-            if cell is not None and not isinstance(cell, str):
-                cell = json.dumps(cell)
-            out.append((conv_id, r_i, c_i, cols[c_i], cell))
-    return pd.DataFrame(
-        out, columns=["conv_id", "row_seq", "col_idx", "col_name", "cell"]
-    )
+def _assemble_batches(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+    """Conversation-sorted (conv_id, turn_idx, extracted_text) batches →
+    long spans, one output batch per input batch that completes a
+    conversation, and one for the last conversation.
+
+    A conversation is flushed when the next one starts, so its pages may
+    arrive over several batches; the last one is flushed at end of input.
+    """
+    spans: dict[str, list] = {name: [] for name in ASSEMBLE_SCHEMA.names}
+
+    def flush(conv_id: str, pages: list) -> None:
+        cols, rows = align_pages(pages)
+        for r_i, row in enumerate(rows):
+            n = len(row)
+            spans["conv_id"].extend([conv_id] * n)
+            spans["row_seq"].extend([r_i] * n)
+            spans["col_idx"].extend(range(n))
+            spans["col_name"].extend(cols[:n])
+            spans["cell"].extend(
+                c if c is None or isinstance(c, str) else json.dumps(c) for c in row
+            )
+
+    def emit() -> pa.RecordBatch:
+        rb = pa.RecordBatch.from_pydict(spans, schema=_ASSEMBLE_ARROW_SCHEMA)
+        for v in spans.values():
+            v.clear()
+        return rb
+
+    conv_id, pages = None, []
+    for batch in batches:
+        for cid, text in zip(
+            batch.column("conv_id").to_pylist(), batch.column("extracted_text").to_pylist()
+        ):
+            if cid != conv_id:
+                if pages:
+                    flush(conv_id, pages)
+                conv_id, pages = cid, []
+            o = json.loads(text)
+            pages.append((o["columns"], o["rows"]))
+        if spans["conv_id"]:
+            yield emit()
+    if pages:
+        flush(conv_id, pages)
+        yield emit()
 
 
 def assemble_conversations(extracted: DataFrame) -> DataFrame:
     """Per-conversation combined table (reference schema_align_union,
     scripts/ExtractX_OCR.py:549-572) in long-span form.
 
-    Grouped-map (applyInPandas) over conv_id: per-conversation page lists
-    are small (≤ thousands of turns) while the number of conversations is
-    huge, so the grouping parallelizes; the align kernel is shared with the
-    oracle for bit-parity.
+    One exchange on conv_id (no partition count, so AQE coalesces small
+    partitions), a sort by (conv_id, turn_idx) within each partition, then
+    one mapInArrow that walks conversation boundaries: the Python boundary
+    is paid once per Arrow batch, not once per conversation. The align
+    kernel is shared with the oracle for bit-parity.
     """
     return (
         extracted.filter(F.col("tool").isin("grid", "json"))
-        .select("conv_id", "turn_idx", "tool", "extracted_text")
-        .groupBy("conv_id")
-        .applyInPandas(_assemble_group, ASSEMBLE_SCHEMA)
+        .select("conv_id", "turn_idx", "extracted_text")
+        .repartition("conv_id")
+        .sortWithinPartitions("conv_id", "turn_idx")
+        .mapInArrow(_assemble_batches, ASSEMBLE_SCHEMA)
     )

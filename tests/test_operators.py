@@ -234,7 +234,7 @@ def test_ivf_deterministic_under_repartition(vectors):
 
 
 def test_conversation_assembly_matches_duckdb_oracle(spark):
-    """The applyInPandas assembly exposed as a contract query must equal
+    """The Arrow-map assembly exposed as a contract query must equal
     its DuckDB oracle on sf0.001 (including the ""-fill rows for odd docs
     that lack column n)."""
     import duckdb

@@ -171,6 +171,37 @@ def test_assemble_matches_oracle(spark, corpus, tmp_path):
     )
 
 
+def test_assemble_across_batch_and_part_boundaries(spark, corpus, tmp_path):
+    """Two-record Arrow batches and two-turn salt buckets: conversations
+    straddle both batch edges and extraction parts, and the sorted Arrow
+    map must still equal the oracle. No grid/json turn, no span."""
+    path, pdf = corpus
+    conf = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(conf)
+    spark.conf.set(conf, "2")
+    try:
+        extracted = run_pipeline(spark, path, str(tmp_path / "out"), num_parts=16, turn_bucket=2)
+        got = (
+            assemble_conversations(extracted)
+            .toPandas()
+            .sort_values(["conv_id", "row_seq", "col_idx"], ignore_index=True)
+        )
+        n_plain = assemble_conversations(extracted.filter(F.col("tool") == "text")).count()
+    finally:
+        spark.conf.set(conf, old)
+    tools = pdf.sort_values(["conv_id", "turn_idx"], ignore_index=True)["tool"]
+    want = oracle_assemble(oracle_extract(pdf), tools).sort_values(
+        ["conv_id", "row_seq", "col_idx"], ignore_index=True
+    )
+    # some conversation has more table turns than one batch holds
+    assert pdf["tool"].isin(["grid", "json"]).groupby(pdf["conv_id"]).sum().max() > 2
+    pd.testing.assert_frame_equal(
+        got.astype({"row_seq": "int64", "col_idx": "int64"}),
+        want.astype({"row_seq": "int64", "col_idx": "int64"}),
+    )
+    assert n_plain == 0
+
+
 def test_extract_stage_plan_has_single_exchange(spark, corpus):
     """One shuffle (the explicit salted repartition), no more — also with
     the resume anti-join, whose finished side is broadcast."""

@@ -209,15 +209,16 @@ def test_bucketed_join_runs_with_zero_exchanges(spark, tmp_path):
 
 
 def test_conversation_assembly_single_group_exchange(spark):
-    """The applyInPandas assembly is one exchange on conv_id feeding one
-    FlatMapGroupsInPandas — no extra shuffle, no sort beyond the group."""
+    """The assembly is one exchange on conv_id feeding one sorted
+    MapInArrow — no extra shuffle, no per-group pandas map."""
     import __spark_entry__ as entrymod
 
     df = entrymod.queries()["conversation_assembly"](spark, SF)
     plan = _plan(df)
-    assert "FlatMapGroupsInPandas" in plan
+    assert "MapInArrow" in plan
+    assert "FlatMapGroupsInPandas" not in plan
     assert plan.count("hashpartitioning(") == 1
-    assert "hashpartitioning(conv_id" in plan
+    assert plan.count("hashpartitioning(conv_id") == 1
 
 
 def test_embedding_dedup_lsh_is_bucket_join_not_all_pairs(spark):

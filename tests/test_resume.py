@@ -3,6 +3,7 @@ output equals a single-shot run (BASELINE.json north_rule)."""
 
 from __future__ import annotations
 
+import json
 import os
 
 import pandas as pd
@@ -131,8 +132,62 @@ def test_part_duration_hist_flags_straggler(spark):
     assert h["min_ms"] == 10 and h["width_ms"] == 11
 
 
+@pytest.mark.parametrize("layout", [[], ["--snapshot-table"]], ids=["plain", "snapshot"])
+def test_job_summary_covers_this_run_only(spark, corpus, tmp_path, capsys, layout):
+    """The job summary is observed on the run's own write: a resume counts
+    only the parts it ran, and a resume with nothing left reports zero
+    (and returns, although its write has no rows)."""
+    import job
+
+    path, pdf = corpus
+    base = ["--input", path, "--output", str(tmp_path / "out"), "--num-parts", "8",
+            "--no-warmup", *layout]
+
+    def run(*extra) -> dict:
+        assert job.main(base + list(extra)) == 0
+        return json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+
+    first = run("--only-parts", "0,1,2,3")
+    second = run("--resume")
+    third = run("--resume")
+    assert 0 < first["rows"] < len(pdf)
+    assert first["rows"] + second["rows"] == len(pdf)
+    assert 0 < second["parts_done"] <= 8 - first["parts_done"]
+    for s in (first, second):
+        assert len(s["part_ms_hist"]) == 24
+        assert sum(s["part_ms_hist"]) == s["parts_done"]
+        assert s["part_ms_p50"] <= s["part_ms_max"]
+    assert third["rows"] == 0 and third["parts_done"] == 0
+    assert third["part_ms_hist"] is None
+    assert third["turns_per_sec"] == 0
+
+
+def test_summary_hist_buckets_are_log2_and_clamped(spark):
+    """Bucket 0 holds 0 ms, bucket i holds [2^(i-1), 2^i) ms, and the
+    last bucket also holds every duration above it: nothing is dropped."""
+    from pyspark.sql import Observation
+
+    from ocr_spark.pipeline import PART_MS_BUCKETS, summary_metrics
+
+    durations = [0, 1, 2, 3, 4, 1023, 1024, 2**22, 2**22 + 5, 2**40]
+    rows = [("lineage", "ok", json.dumps({"duration_ms": d})) for d in durations]
+    rows += [("data", "ok", "x"), ("data", "error", "")]
+    obs = Observation()
+    spark.createDataFrame(rows, "rec string, status string, extracted_text string").observe(
+        obs, *summary_metrics()
+    ).write.format("noop").mode("overwrite").save()
+    got = obs.get
+    want = [0] * PART_MS_BUCKETS
+    for i in (0, 1, 2, 2, 3, 10, 11, 23, 23, 23):
+        want[i] += 1
+    assert list(got["hist"]) == want
+    assert sum(got["hist"]) == got["parts"] == len(durations)
+    assert (got["rows"], got["errors"]) == (2, 1)
+    assert (got["min_ms"], got["max_ms"]) == (0, 2**40)
+
+
 def test_assemble_over_written_output_matches_oracle(spark, corpus, tmp_path):
-    """The --assemble job path composes read_extracted → grouped-map
+    """The --assemble job path composes read_extracted → Arrow-map
     assembly over the WRITTEN parquet (not the in-memory frame) — its
     spans must equal the pandas oracle's combined tables."""
     import json as _json
