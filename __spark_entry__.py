@@ -7371,7 +7371,7 @@ def oracle_sql() -> dict[str, str]:
             "   ORDER BY conv_id ROWS BETWEEN UNBOUNDED PRECEDING AND"
             "   1 PRECEDING), 0) AS BIGINT) AS start_off FROM k)"
             " SELECT conv_id, shard, n_tokens, start_off,"
-            f" CAST(floor(start_off / {_SFT_BUDGET}) AS BIGINT)"
+            f" CAST(start_off // {_SFT_BUDGET} AS BIGINT)"
             "  AS seq_idx,"
             f" CAST(start_off % {_SFT_BUDGET} AS BIGINT)"
             "  AS pos_in_seq FROM o"

@@ -1380,11 +1380,19 @@ def _two_phase_rank(
     survivors — so a head group with billions of rows never funnels
     into one partition.  ``limit`` is an int or a per-row Column (a
     broadcast-joined per-group quota).  Emits ``__rank`` (int) with
-    rows already filtered to __rank <= limit.  Requires a NUMERIC
-    ``id_col`` (pmod on a non-numeric id yields NULL shards and the
-    prune would silently pass everything through)."""
+    rows already filtered to __rank <= limit.  Requires an INTEGRAL
+    ``id_col``: pmod on a string id plans without complaint and fails
+    (or silently casts) only when an action runs, so any other type
+    raises TypeError here, while the plan is built."""
     from pyspark.sql import Window
+    from pyspark.sql.types import IntegralType
 
+    id_type = df.schema[id_col].dataType
+    if not isinstance(id_type, IntegralType):
+        raise TypeError(
+            f"_two_phase_rank: id column {id_col!r} must be integral,"
+            f" got {id_type.simpleString()}"
+        )
     lim = F.lit(limit) if isinstance(limit, int) else limit
     shard = F.pmod(F.col(id_col), F.lit(prune_shards))
     w1 = Window.partitionBy(*group_cols, "__shard").orderBy(*order_cols)

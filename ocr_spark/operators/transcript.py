@@ -1484,13 +1484,13 @@ def sft_manifest(
         .rowsBetween(Window.unboundedPreceding, -1)
     )
     off = F.coalesce(F.sum("n_tokens").over(w), F.lit(0)).cast("long")
-    out = base.select(
+    out = base.withColumn("start_off", off).select(
         "conv_id",
         "shard",
         "n_tokens",
-        off.alias("start_off"),
-        F.floor(off / F.lit(budget)).cast("long").alias("seq_idx"),
-        (off % budget).cast("long").alias("pos_in_seq"),
+        "start_off",
+        F.expr(f"start_off DIV {budget}").alias("seq_idx"),
+        (F.col("start_off") % budget).alias("pos_in_seq"),
     )
     return _own_caches(out, [merged])
 
@@ -1579,10 +1579,13 @@ def dynamic_batching(
         F.expr(f"CAST(n_tokens DIV {bucket_tokens} AS INT)"),
     )
     w = Window.partitionBy("len_bucket").orderBy("__key", "conv_id")
-    rn = F.row_number().over(w) - 1
-    placed = base.withColumn(
-        "batch_idx", F.floor(rn / batch_size).cast("int")
-    ).withColumn("pos_in_batch", (rn % batch_size).cast("int"))
+    placed = (
+        base.withColumn("__rn", F.row_number().over(w) - 1)
+        .withColumn(
+            "batch_idx", F.expr(f"CAST(__rn DIV {batch_size} AS INT)")
+        )
+        .withColumn("pos_in_batch", F.col("__rn") % batch_size)
+    )
     wb = Window.partitionBy("len_bucket", "batch_idx")
     return placed.select(
         "conv_id",

@@ -12,7 +12,8 @@ advisory-sized slices and replicates the matching dim rows), then
 appends the wall clocks and the `SortMergeJoin(skew=true)` final-plan
 line to SKEW.md.
 
-Usage: python scripts/aqe_skew_demo.py [--turns 2000000] [--cpus 16]
+Spark runs on every CPU this process may use. Usage: python
+scripts/aqe_skew_demo.py [--turns 2000000]
 """
 
 from __future__ import annotations
@@ -68,12 +69,12 @@ def _skewed_join(spark, turns: int, n_convs: int = 256):
 def main(argv=None) -> int:
     p = argparse.ArgumentParser()
     p.add_argument("--turns", type=int, default=2_000_000)
-    p.add_argument("--cpus", type=int, default=16)
     args = p.parse_args(argv)
 
     from ocr_spark.session import get_spark
 
-    spark = get_spark(app="aqe-skew-demo", master=f"local[{args.cpus}]")
+    cpus = len(os.sched_getaffinity(0))
+    spark = get_spark(app="aqe-skew-demo", master=f"local[{cpus}]")
     spark.sparkContext.setLogLevel("ERROR")
     for k, v in _CONF.items():
         spark.conf.set(k, v)

@@ -11,8 +11,8 @@ extraction stage twice at the same parallelism:
   the hot conversation spreads across ~turns/64 parts.
 
 Writes SKEW.md with wall times, the partition-size distribution (max/median
-rows per task), and the speedup. Usage: python scripts/skew_demo.py
-[--turns 600000] [--cpus 16]
+rows per task), and the speedup. Spark runs on every CPU this process may
+use. Usage: python scripts/skew_demo.py [--turns 600000]
 """
 
 from __future__ import annotations
@@ -26,67 +26,93 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
+#: the hot conversation is generated as this many turn ranges, one per
+#: generation task
+HOT_RANGES = 64
+
+
+def skew_plan(n_turns: int):
+    """Turn-range plan of the skew corpus, one row per (conv_id, payload
+    seed, conv index, first turn, end turn, global offset): ~n_turns/22.5
+    base conversations of 5..40 turns (the fixtures' defaults), then
+    ``conv_hot`` with half as many turns as the base — a third of the
+    final table — cut into HOT_RANGES ranges."""
+    import numpy as np
+    import pandas as pd
+
+    n_convs = max(1, int(n_turns / 22.5))
+    counts = np.random.default_rng([42, 0]).integers(5, 41, n_convs)
+    hot = np.linspace(0, counts.sum() // 2, HOT_RANGES + 1, dtype=np.int64)
+    zeros = np.zeros(HOT_RANGES, dtype=np.int64)
+    return pd.DataFrame(
+        {
+            "conv_id": [f"conv_{i:06d}" for i in range(n_convs)]
+            + ["conv_hot"] * HOT_RANGES,
+            "seed": np.r_[np.full(n_convs, 42), zeros + 99],
+            "conv_i": np.r_[np.arange(n_convs), zeros],
+            "lo": np.r_[np.zeros(n_convs, dtype=np.int64), hot[:-1]],
+            "hi": np.r_[counts, hot[1:]],
+            "g_off": np.r_[np.cumsum(counts) - counts, zeros],
+        }
+    )
+
+
+def gen_turns(batches):
+    """Expand plan rows into transcript rows with the fixtures'
+    per-(seed, conv, turn) payload substreams, so the table does not
+    depend on how the plan is partitioned. Global turn g = g_off + t
+    sets role ``_ROLES[g % 3]`` and ts ``epoch + 60·g`` seconds."""
+    import datetime as dt
+
+    import pandas as pd
+
+    from ocr_spark.fixtures import _ROLES, turn_payload
+
+    epoch = dt.datetime(2026, 1, 1, tzinfo=dt.timezone.utc)
+    for pdf in batches:
+        rows = []
+        plan = zip(*(pdf[c].tolist() for c in pdf.columns))
+        for cid, seed, conv_i, lo, hi, g_off in plan:
+            for t in range(lo, hi):
+                tool, text = turn_payload(seed, conv_i, t)
+                g = g_off + t
+                rows.append(
+                    (
+                        cid,
+                        t,
+                        _ROLES[g % 3],
+                        text,
+                        tool,
+                        epoch + dt.timedelta(seconds=60 * g),
+                    )
+                )
+        yield pd.DataFrame(
+            rows, columns=["conv_id", "turn_idx", "role", "text", "tool", "ts"]
+        )
+
 
 def main(argv=None) -> int:
     p = argparse.ArgumentParser()
     p.add_argument("--turns", type=int, default=600_000)
-    p.add_argument("--cpus", type=int, default=16)
     p.add_argument("--num-parts", type=int, default=64)
     args = p.parse_args(argv)
 
-    import numpy as np
-    import pandas as pd
-
-    import bench
     from ocr_spark.pipeline import extract_stage, with_part_id
     from ocr_spark.session import get_spark
 
-    spark = get_spark(app="skew-demo", master=f"local[{args.cpus}]")
+    cpus = len(os.sched_getaffinity(0))
+    spark = get_spark(app="skew-demo", master=f"local[{cpus}]")
     spark.sparkContext.setLogLevel("ERROR")
 
-    # base corpus (distributed gen, cached) + one hot conversation with 1/3
-    # of the total turns, generated with the same per-(conv,turn) substreams
-    base_path, n_base = bench.build_corpus(spark, args.turns)
-    hot_n = n_base // 2  # hot conv = 1/3 of the final table
-    out_schema = spark.read.parquet(base_path).schema
-
-    def gen_hot(batches):
-        import datetime as dt
-
-        from ocr_spark.fixtures import _ROLES, turn_payload
-
-        epoch = dt.datetime(2026, 1, 1, tzinfo=dt.timezone.utc)
-        for pdf in batches:
-            rows = []
-            for lo, hi in zip(pdf["lo"], pdf["hi"]):
-                for t in range(int(lo), int(hi)):
-                    tool, text = turn_payload(99, 0, t)
-                    rows.append(
-                        (
-                            "conv_hot",
-                            t,
-                            _ROLES[t % 3],
-                            text,
-                            tool,
-                            epoch + dt.timedelta(seconds=t),
-                        )
-                    )
-            yield pd.DataFrame(
-                rows, columns=["conv_id", "turn_idx", "role", "text", "tool", "ts"]
-            )
-
-    n_chunks = 64
-    bounds = np.linspace(0, hot_n, n_chunks + 1, dtype=np.int64)
-    plan = pd.DataFrame({"lo": bounds[:-1], "hi": bounds[1:]})
-    hot = (
-        spark.createDataFrame(plan)
-        .repartition(n_chunks)
-        .mapInPandas(gen_hot, out_schema)
-    )
-    skewed = spark.read.parquet(base_path).unionByName(hot)
-    skew_path = os.path.join(bench.BENCH_DIR, f"skew_{args.turns}.parquet")
+    skew_path = os.path.join(REPO, ".bench", f"skew_{args.turns}.parquet")
     if not os.path.exists(os.path.join(skew_path, "_SUCCESS")):
-        skewed.write.mode("overwrite").parquet(skew_path)
+        spark.createDataFrame(skew_plan(args.turns)).repartition(
+            HOT_RANGES
+        ).mapInPandas(
+            gen_turns,
+            "conv_id string, turn_idx int, role string, text string,"
+            " tool string, ts timestamp",
+        ).write.mode("overwrite").parquet(skew_path)
     df = spark.read.parquet(skew_path)
     total = df.count()
 
@@ -116,7 +142,7 @@ def main(argv=None) -> int:
             "# SKEW — salted repartition vs naive conv_id partitioning\n\n"
             "Same extraction stage, same skewed corpus (one conversation = "
             "1/3 of all turns), same parallelism "
-            f"(local[{args.cpus}], {args.num_parts} parts, {total} turns). "
+            f"(local[{cpus}], {args.num_parts} parts, {total} turns). "
             "Regenerate: `python scripts/skew_demo.py`.\n\n"
             "| partitioning | stage wall | max part rows | median part rows |\n"
             "|---|---|---|---|\n"

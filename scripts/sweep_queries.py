@@ -3,10 +3,11 @@
 Usage: python scripts/sweep_queries.py [--sf /root/testdata/sf0.1]
 
 Prints one JSON line {"sf": ..., "total_sec": ..., "queries": {name: sec}}
-and rewrites SWEEP.md. This is the whole-surface scale smoke (the bench
-times only the headline subset): every operator must RUN at 10× the
-contract-check scale, and the per-query trend across rounds catches
-regressions the correctness gate cannot see.
+and rewrites SWEEP.md. This is the per-query timing of the whole contract
+surface (`perfbench/run.py` measures the extraction job end to end): every
+operator must RUN at 10× the contract-check scale, and the per-query trend
+across rounds catches regressions the correctness gate cannot see. Spark
+runs on every CPU this process may use.
 """
 
 from __future__ import annotations
@@ -28,7 +29,10 @@ def main() -> int:
     import __spark_entry__ as se
     from ocr_spark.session import get_spark
 
-    spark = get_spark(app="sweep", master="local[32]", shuffle_partitions=32)
+    cpus = len(os.sched_getaffinity(0))
+    spark = get_spark(
+        app="sweep", master=f"local[{cpus}]", shuffle_partitions=32
+    )
     spark.sparkContext.setLogLevel("ERROR")
 
     times: dict[str, float] = {}
@@ -68,10 +72,12 @@ def main() -> int:
     with open(os.path.join(root, "SWEEP.md"), "w") as f:
         f.write(
             "# SWEEP — every contract query timed at sf0.1\n\n"
-            "Regenerate with `python scripts/sweep_queries.py`. The bench times the\n"
-            "headline subset; this is the whole-surface scale smoke (10× the\n"
-            "correctness-check scale). Timings are one warm-session run on the\n"
-            f"shared host — trend, not gospel. Total: {total}s for "
+            "Regenerate with `python scripts/sweep_queries.py`. This is the\n"
+            "per-query timing of the whole contract surface (10× the\n"
+            f"correctness-check scale) at `local[{cpus}]`; `perfbench/run.py`\n"
+            "measures the extraction job end to end. Timings are one\n"
+            "warm-session run on the shared host — trend, not gospel.\n"
+            f"Total: {total}s for "
             f"{len(times)} queries.\n\n"
             f"MinHash-LSH precision: {n_cand} candidates → {n_verified} "
             f"verified pairs (ratio {ratio}:1; the dedup-chain cost "

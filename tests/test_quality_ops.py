@@ -473,6 +473,17 @@ def test_domain_cap_binds_and_is_deterministic(spark):
         assert sorted(grp["doc_id"]) == sorted(ids)
 
 
+def test_domain_cap_rejects_string_id_at_plan_time(spark):
+    # pmod on a string id would plan fine and fail (or cast silently)
+    # only inside the job; the check fires before any action runs
+    docs = spark.createDataFrame(
+        [("d1", "t", "dom0"), ("7", "t", "dom1")],
+        "doc_id string, text string, source string",
+    )
+    with pytest.raises(TypeError, match="doc_id"):
+        textops.domain_cap(docs, k=1)
+
+
 def _py_winnow(text, k=4, w=4):
     toks = text.split(" ")
     gs = [
