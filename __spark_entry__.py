@@ -7041,12 +7041,13 @@ def oracle_sql() -> dict[str, str]:
         ),
         # cross-conversation boilerplate: per-turn md5 digests (text
         # never shuffles), distinct-conv counts, flag at >= 5 convs;
-        # blank turns never count and always read n_convs = 0
+        # blank (NULL/whitespace-only) turns never count and always read
+        # n_convs = 0
         "turn_boilerplate": (
             "WITH " + _TURNS_SQL + ","
             " b AS (SELECT conv_id, turn_idx, role,"
             "  md5(coalesce(text, '')) AS dig,"
-            "  coalesce(text, '') = '' AS blank FROM turns),"
+            "  trim(coalesce(text, '')) = '' AS blank FROM turns),"
             " c AS (SELECT dig, CAST(COUNT(DISTINCT conv_id) AS BIGINT)"
             "   AS n FROM b WHERE NOT blank GROUP BY dig)"
             " SELECT b.conv_id, b.turn_idx, b.role,"
@@ -7293,7 +7294,7 @@ def oracle_sql() -> dict[str, str]:
             "  WHERE CAST(substr(conv_id, 6, 4) AS INT) % 13 = 0),"
             " cmask AS (SELECT md5(coalesce(text, '')) AS dig,"
             "  COUNT(DISTINCT conv_id) AS nc FROM turns"
-            "  WHERE coalesce(text, '') <> '' GROUP BY 1),"
+            "  WHERE trim(coalesce(text, '')) <> '' GROUP BY 1),"
             " ckept AS (SELECT t.conv_id, t.turn_idx, t.role, t.text"
             "  FROM turns t LEFT JOIN cmask m"
             "   ON m.dig = md5(coalesce(t.text, ''))"
@@ -7302,7 +7303,7 @@ def oracle_sql() -> dict[str, str]:
             "  FROM ckept GROUP BY conv_id),"
             " emask AS (SELECT md5(coalesce(text, '')) AS dig,"
             "  COUNT(DISTINCT conv_id) AS nc FROM ev"
-            "  WHERE coalesce(text, '') <> '' GROUP BY 1),"
+            "  WHERE trim(coalesce(text, '')) <> '' GROUP BY 1),"
             " ekept AS (SELECT t.conv_id, t.turn_idx, t.role, t.text"
             "  FROM ev t LEFT JOIN emask m"
             "   ON m.dig = md5(coalesce(t.text, ''))"

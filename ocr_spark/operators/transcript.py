@@ -312,8 +312,9 @@ def boilerplate_turns(turns: DataFrame, min_convs: int = 5) -> DataFrame:
     conversation structure intact (the C4 line-dedup idea lifted from
     lines-within-documents to turns-within-conversations).
 
-    Blank turns are never counted (clean_turns owns those), and NULL
-    text hashes as '' on both engines.
+    Blank turns (NULL, empty or whitespace-only, the conversation_tiers
+    rule) are never counted (clean_turns owns those), and NULL text
+    hashes as '' on both engines.
 
     Scale shape: the per-turn digest is a map-side JVM md5, so only
     (digest, conv_id) pairs reach the distinct-count exchange and the
@@ -325,7 +326,7 @@ def boilerplate_turns(turns: DataFrame, min_convs: int = 5) -> DataFrame:
         "turn_idx",
         "role",
         F.md5(F.coalesce(F.col("text"), F.lit(""))).alias("__dig"),
-        (F.coalesce(F.col("text"), F.lit("")) == "").alias("__blank"),
+        (F.trim(F.coalesce(F.col("text"), F.lit(""))) == "").alias("__blank"),
     )
     counts = (
         base.filter(~F.col("__blank"))

@@ -6,7 +6,7 @@ Dataflow (SURVEY.md §3.4):
     extract_stage, the one place the plan is built:
       → part_id = pmod(xxhash64(conv_id, floor(turn_idx/BUCKET)), P)
       → optional resume anti-join / only_parts filter (skip logical parts)
-      → repartitionById onto ~2×cores tasks, contiguous part blocks
+      → repartitionById onto one task per core, contiguous part blocks
                                             (no second hash: task t runs parts
                                              [t·P/T, (t+1)·P/T); the turn
                                              bucket splits long conversations
@@ -60,7 +60,8 @@ from ocr_spark.operators.relational import anti_join_unfinished
 #: Default number of logical resume parts: purely the resume granularity
 #: (a finished part is never redone). At 10^12 turns this would be sized to
 #: ~1-4 GB of input per part (e.g. 2^17 parts). It does not set the task
-#: count: extract_stage packs contiguous blocks of parts onto ~2×cores tasks.
+#: count: extract_stage packs contiguous blocks of parts onto one task per
+#: core.
 DEFAULT_NUM_PARTS = 256
 #: Turns per salt bucket: conversations longer than this are split across
 #: logical parts, defusing long-conversation skew.
@@ -135,6 +136,14 @@ def summary_metrics() -> list[Column]:
     bucket = F.when(ms <= 0, 0).when(
         ms > 0, F.least(F.length(F.bin(ms)), F.lit(PART_MS_BUCKETS - 1))
     )
+    # one aggregate, not one count_if per bucket: collect the parts' buckets
+    # (data rows' bucket is null, and collect_list skips nulls), then fold
+    # them into the fixed-size histogram
+    hist = F.aggregate(
+        F.collect_list(bucket),
+        F.array_repeat(F.lit(0).cast("long"), PART_MS_BUCKETS),
+        lambda acc, b: F.transform(acc, lambda n, i: F.when(i == b, n + 1).otherwise(n)),
+    )
     return [
         F.count_if(lineage).alias("parts"),
         F.count_if(F.col("rec") == "data").alias("rows"),
@@ -144,7 +153,7 @@ def summary_metrics() -> list[Column]:
         F.min(ms).alias("min_ms"),
         F.max(ms).alias("max_ms"),
         F.percentile_approx(ms, F.lit(0.5)).alias("p50_ms"),
-        F.array(*[F.count_if(bucket == i) for i in range(PART_MS_BUCKETS)]).alias("hist"),
+        hist.alias("hist"),
     ]
 
 
@@ -405,14 +414,15 @@ def extract_stage(
     the listed parts (used by tests to simulate a job killed after k
     partitions).
 
-    The logical parts run on ``min(num_parts, 2 × defaultParallelism)``
-    tasks, each a contiguous block of part ids, assigned directly (no second
-    hash): no task is empty when parts ≥ tasks, and the fixed per-task
-    Python cost is paid ~2×cores times, not once per part. Lineage does not
-    depend on this mapping, and part ids are uniform hashes, so the salting
-    still spreads hot conversations across tasks.
+    The logical parts run on ``min(num_parts, defaultParallelism)`` tasks,
+    each a contiguous block of part ids, assigned directly (no second hash):
+    no task is empty when parts ≥ tasks, and the stage runs in one wave, so
+    the fixed per-task Python cost (~0.2 s of CPU) is paid once per core,
+    not once per part. Lineage does not depend on this mapping, and part ids
+    are uniform hashes, so the salting still spreads hot conversations
+    across tasks.
     """
-    n_tasks = min(num_parts, 2 * df.sparkSession.sparkContext.defaultParallelism)
+    n_tasks = min(num_parts, df.sparkSession.sparkContext.defaultParallelism)
     df = with_part_id(df, num_parts, turn_bucket)
     if finished is not None:
         df = anti_join_unfinished(df, finished, "part_id")
@@ -626,16 +636,19 @@ def assemble_conversations(extracted: DataFrame) -> DataFrame:
     """Per-conversation combined table (reference schema_align_union,
     scripts/ExtractX_OCR.py:549-572) in long-span form.
 
-    One exchange on conv_id (no partition count, so AQE coalesces small
-    partitions), a sort by (conv_id, turn_idx) within each partition, then
-    one mapInArrow that walks conversation boundaries: the Python boundary
-    is paid once per Arrow batch, not once per conversation. The align
-    kernel is shared with the oracle for bit-parity.
+    One exchange on conv_id into ``defaultParallelism`` partitions (a fixed
+    count, so AQE keeps it instead of coalescing a small input into one
+    serial task), a sort by (conv_id, turn_idx) within each partition, then
+    one mapInArrow that walks conversation boundaries: the stage is one
+    wave of Python tasks, and the Python boundary is paid once per Arrow
+    batch, not once per conversation. The align kernel is shared with the
+    oracle for bit-parity.
     """
+    n_tasks = extracted.sparkSession.sparkContext.defaultParallelism
     return (
         extracted.filter(F.col("tool").isin("grid", "json"))
         .select("conv_id", "turn_idx", "extracted_text")
-        .repartition("conv_id")
+        .repartition(n_tasks, "conv_id")
         .sortWithinPartitions("conv_id", "turn_idx")
         .mapInArrow(_assemble_batches, ASSEMBLE_SCHEMA)
     )

@@ -55,7 +55,10 @@ def main(argv=None) -> int:
     import __spark_entry__ as entrymod
     from ocr_spark.session import get_spark
 
-    spark = get_spark(app="contract-check", master="local[8]", shuffle_partitions=16)
+    cpus = len(os.sched_getaffinity(0))
+    spark = get_spark(
+        app="contract-check", master=f"local[{cpus}]", shuffle_partitions=2 * cpus
+    )
     con = duckdb.connect()
     for t in TABLES:
         con.sql(

@@ -2,7 +2,7 @@
 its DuckDB oracle re-proven at sf0.001 on EVERY pytest run, so queries
 rotated out of the driver's 50-entry correctness window keep fresh green
 evidence each round. Runs scripts/check_contract.py as a subprocess —
-its own SparkSession (local[8]) must not stop the shared test session.
+its own SparkSession (one thread per owned CPU) must not stop the shared test session.
 ~95 s; the single slowest test in the gate, by design the widest."""
 
 from __future__ import annotations

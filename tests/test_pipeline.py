@@ -5,6 +5,7 @@ salting, and order-invariance properties."""
 from __future__ import annotations
 
 import json
+import re
 
 import numpy as np
 import pandas as pd
@@ -218,14 +219,14 @@ def test_extract_stage_plan_has_single_exchange(spark, corpus):
     assert "BroadcastHashJoin" in plan and "LeftAnti" in plan
 
 
-def test_parts_run_as_contiguous_blocks_on_2x_cores_tasks(spark, corpus):
+def test_parts_run_as_contiguous_blocks_one_task_per_core(spark, corpus):
     """Logical parts (the resume unit) are decoupled from physical tasks:
-    64 parts run on min(64, 2 × cores) tasks, none empty, each a contiguous
-    part_id block — and lineage is what the driver computes from the input
-    alone, whatever the part → task map."""
+    64 parts run on min(64, cores) tasks (one wave), none empty, each a
+    contiguous part_id block — and lineage is what the driver computes from
+    the input alone, whatever the part → task map."""
     path, pdf = corpus
     out = extract_stage(spark.read.parquet(path), 64)
-    n_tasks = min(64, 2 * spark.sparkContext.defaultParallelism)
+    n_tasks = min(64, spark.sparkContext.defaultParallelism)
     blocks = (
         out.filter(F.col("rec") == "data")
         .groupBy(F.spark_partition_id().alias("task"))
@@ -256,6 +257,21 @@ def test_parts_run_as_contiguous_blocks_on_2x_cores_tasks(spark, corpus):
     pd.testing.assert_frame_equal(
         got, want, check_names=False, check_dtype=False, check_index_type=False
     )
+
+
+def test_assembly_exchange_is_one_task_per_core(spark, corpus):
+    """The assembly exchange has a fixed count, defaultParallelism, so AQE
+    keeps it (REPARTITION_BY_NUM, no coalescing read) instead of collapsing
+    a small input into one serial Python task."""
+    path, _ = corpus
+    extracted = extract_stage(spark.read.parquet(path), 16).filter(F.col("rec") == "data")
+    df = assemble_conversations(extracted)
+    df.collect()
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "isFinalPlan=true" in plan
+    cores = spark.sparkContext.defaultParallelism
+    assert re.search(rf"hashpartitioning\(conv_id#\d+, {cores}\), REPARTITION_BY_NUM", plan)
+    assert "AQEShuffleRead" not in plan
 
 
 def test_snapshot_manifest_pruning_is_selective(spark, corpus, tmp_path):

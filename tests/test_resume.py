@@ -186,6 +186,38 @@ def test_summary_hist_buckets_are_log2_and_clamped(spark):
     assert (got["min_ms"], got["max_ms"]) == (0, 2**40)
 
 
+def test_summary_metrics_match_python_log2_buckets(spark):
+    """hist/parts/min_ms/max_ms over random part durations equal a Python
+    log2 bucketing; with no lineage rows the histogram is 24 zeros."""
+    from hypothesis import example, given, settings
+    from hypothesis import strategies as st
+    from pyspark.sql import Observation
+
+    from ocr_spark.pipeline import PART_MS_BUCKETS, summary_metrics
+
+    @settings(max_examples=15, deadline=None)
+    @example([])
+    @example([0, 2**40])
+    @given(st.lists(st.integers(0, 2**40), max_size=40))
+    def check(durations):
+        rows = [("lineage", "ok", json.dumps({"duration_ms": d})) for d in durations]
+        rows += [("data", "ok", "x")]
+        obs = Observation()
+        spark.createDataFrame(rows, "rec string, status string, extracted_text string").observe(
+            obs, *summary_metrics()
+        ).write.format("noop").mode("overwrite").save()
+        got = obs.get
+        want = [0] * PART_MS_BUCKETS
+        for d in durations:
+            want[min(d.bit_length(), PART_MS_BUCKETS - 1)] += 1
+        assert list(got["hist"]) == want
+        assert got["parts"] == len(durations)
+        assert got["min_ms"] == (min(durations) if durations else None)
+        assert got["max_ms"] == (max(durations) if durations else None)
+
+    check()
+
+
 def test_assemble_over_written_output_matches_oracle(spark, corpus, tmp_path):
     """The --assemble job path composes read_extracted → Arrow-map
     assembly over the WRITTEN parquet (not the in-memory frame) — its

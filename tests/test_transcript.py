@@ -408,6 +408,9 @@ def test_boilerplate_turns_flags_cross_conv_repeats(spark):
         rows.append((f"c{c}", 1, "user", f"unique question {c}"))
     rows.append(("c0", 2, "assistant", ""))       # blank: never counted
     rows.append(("c1", 2, "assistant", None))     # NULL text == blank
+    # whitespace-only is blank too, as in conversation_tiers, even when
+    # it recurs in >= 5 conversations
+    rows += [(f"c{c}", 3, "assistant", "   ") for c in range(6)]
     turns = spark.createDataFrame(
         rows, ["conv_id", "turn_idx", "role", "text"]
     )
@@ -424,6 +427,8 @@ def test_boilerplate_turns_flags_cross_conv_repeats(spark):
     assert blank.n_convs == 0 and not blank.is_boilerplate
     nulltext = out[("c1", 2)]
     assert nulltext.n_convs == 0 and not nulltext.is_boilerplate
+    spaces = out[("c4", 3)]
+    assert spaces.n_convs == 0 and not spaces.is_boilerplate
 
 
 def test_boilerplate_turns_distinct_convs_not_occurrences(spark):
