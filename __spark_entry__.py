@@ -18,6 +18,8 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ocr_spark.worker import python_stage
+
 
 def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/documents.parquet")
@@ -44,6 +46,11 @@ _NEAR_DUP_HEAD_TEXT = "perturbed head turn"
 #: verbatim agent-retry turn injected into the transcript synthesis —
 #: shared with the oracles (quote-free so it embeds in SQL literals).
 _TURNS_RETRY_TEXT = "tool timeout retrying identical call"
+#: blank turn text made only of non-ASCII space separators (U+00A0,
+#: U+3000): Spark's trim keeps them and DuckDB's strips them, so the
+#: queries whose fixtures carry it replay green only while both engines
+#: share one definition of blank
+_NBSP_BLANK = "\u00a0\u3000"
 
 
 def _docs_par(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -64,6 +71,23 @@ def _docs_par(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _tbl(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+
+
+def _payloads(df: DataFrame, encode: Callable[..., bytes]) -> DataFrame:
+    """(vec_id, ...) integer columns → (vec_id, payload) with payload =
+    ``encode(vec_id, ...)``: the multimodal fixtures' synthetic files,
+    built in one Arrow-batched mapInPandas pass."""
+
+    @python_stage
+    def build(it):
+        import pandas as pd
+
+        for pdf in it:
+            rows = zip(*(pdf[c] for c in pdf.columns))
+            payloads = [encode(*map(int, r)) for r in rows]
+            yield pd.DataFrame({"vec_id": pdf["vec_id"], "payload": payloads})
+
+    return df.mapInPandas(build, "vec_id long, payload binary")
 
 
 # ---------------------------------------------------------------------------
@@ -282,6 +306,7 @@ from ocr_spark.operators.transcript import CONTAIN_MAX_LEN as _CONTAIN_MAX_LEN  
 from ocr_spark.operators.transcript import SFT_PACK_BUDGET as _SFT_BUDGET  # noqa: E402
 from ocr_spark.operators.transcript import SFT_PACK_SHARDS as _SFT_SHARDS  # noqa: E402
 from ocr_spark.operators.transcript import _trunc_flag_sql  # noqa: E402
+from ocr_spark.operators.transcript import blank_sql as _blank_sql  # noqa: E402
 from ocr_spark.operators.textops import (  # noqa: E402
     DOM_ANCHOR_RE as _DOM_ANCHOR_RE,
     DOM_BLOCK_RE as _DOM_BLOCK_RE,
@@ -893,6 +918,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
         from ocr_spark.operators import pages
 
+        @python_stage
         def build(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
             from ocr_spark.kernels.pdf import build_pdf, build_pdf_modern
 
@@ -940,6 +966,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
         from ocr_spark.operators import pages
 
+        @python_stage
         def build(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
             from ocr_spark.kernels.pdf import build_pdf_cid
 
@@ -988,6 +1015,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
         from ocr_spark.operators import pages
 
+        @python_stage
         def build(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
             from ocr_spark.kernels.pdf import build_pdf_encrypted
 
@@ -2247,6 +2275,14 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             text.alias("text"),
         )
 
+    def _non_ascii_blanks(t):
+        # the blank turns made of U+00A0/U+3000 (_NBSP_BLANK) instead of
+        # '': the blank-handling queries must still read them as blank
+        return t.withColumn(
+            "text",
+            F.when(F.col("text") == "", F.lit(_NBSP_BLANK)).otherwise(F.col("text")),
+        )
+
     def qa_pair_extract(spark, sf):
         # each assistant turn + nearest preceding user turn → the
         # (prompt, response) supervision pairs SFT ingests
@@ -2267,7 +2303,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # cross-conversation repeated-turn masking: the synthetic retry
         # text recurs in every conversation's 7-blocks (n_convs = 97)
         # and must flag; ordinary per-doc texts stay unique (n_convs=1)
-        return transcript.boilerplate_turns(_turns(spark, sf))
+        return transcript.boilerplate_turns(_non_ascii_blanks(_turns(spark, sf)))
 
     def _inject_refusals(t):
         # canned-refusal / AI-ism injector (the synthetic corpus has no
@@ -2303,7 +2339,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # role flips / blanked-turn removals create violations, the
         # retry text is 97-conv boilerplate
         return transcript.conversation_tiers(
-            _inject_refusals(_turns(spark, sf))
+            _non_ascii_blanks(_inject_refusals(_turns(spark, sf)))
         )
 
     def conversation_forks(spark, sf):
@@ -2391,7 +2427,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # banners recur corpus-wide and would flag everything), then
         # rendered 5-gram overlap — the %13 originals must flag, the
         # rest must not
-        t = _turns(spark, sf)
+        t = _non_ascii_blanks(_turns(spark, sf))
         cnum = F.substring("conv_id", 6, 4).cast("int")
         ev = t.filter(cnum % 13 == 0).select(
             F.concat(F.lit("ev_"), F.substring("conv_id", 6, 4)).alias(
@@ -2819,71 +2855,31 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             _tbl(spark, sf, "embeddings").filter(F.col("vec_id") < 256)
         )
 
-    def multimodal_features(spark, sf):
-        emb = _tbl(spark, sf, "embeddings").select("vec_id", "label")
-
-        def enc(it):
-            import pandas as pd
-
-            for pdf in it:
-                yield pd.DataFrame(
-                    {
-                        "vec_id": pdf["vec_id"],
-                        "payload": [
-                            multimodal.encode_fake_image(
-                                int(v), int(l) % 16 + 1, int(v) % 8 + 1
-                            )
-                            for v, l in zip(pdf["vec_id"], pdf["label"])
-                        ],
-                    }
-                )
-
-        from pyspark.sql import types as T
-
-        schema = T.StructType(
-            [
-                T.StructField("vec_id", T.LongType()),
-                T.StructField("payload", T.BinaryType()),
-            ]
+    def _fake_images(spark, sf):
+        # encode_fake_image payloads: label%16+1 wide, vec_id%8+1 high
+        return _payloads(
+            _tbl(spark, sf, "embeddings").select("vec_id", "label"),
+            lambda v, label: multimodal.encode_fake_image(v, label % 16 + 1, v % 8 + 1),
         )
-        return multimodal.image_features(emb.mapInPandas(enc, schema), target=(4, 4))
+
+    def multimodal_features(spark, sf):
+        return multimodal.image_features(_fake_images(spark, sf), target=(4, 4))
 
     def _ahash_payloads(spark, sf):
         # 8x8 md5-pixel fixture images with two injected near-dup
         # families the oracle replays: vec_id%97==3 -> the EXACT base
         # image (id 7); %97==5 -> base image with pixel 0 overwritten
         # by vec_id%251 (a one-byte perturbation, hamming-small)
-        emb = _tbl(spark, sf, "embeddings").select("vec_id")
+        def enc(v: int) -> bytes:
+            if v % 97 == 3:
+                return multimodal.encode_fake_image(7, 8, 8)
+            if v % 97 == 5:
+                b = bytearray(multimodal.encode_fake_image(7, 8, 8))
+                b[9] = v % 251  # first pixel byte (9-byte header)
+                return bytes(b)
+            return multimodal.encode_fake_image(v, 8, 8)
 
-        def enc(it):
-            import pandas as pd
-
-            for pdf in it:
-                payloads = []
-                for v in pdf["vec_id"]:
-                    v = int(v)
-                    if v % 97 == 3:
-                        p = multimodal.encode_fake_image(7, 8, 8)
-                    elif v % 97 == 5:
-                        b = bytearray(multimodal.encode_fake_image(7, 8, 8))
-                        b[9] = v % 251  # first pixel byte (9-byte header)
-                        p = bytes(b)
-                    else:
-                        p = multimodal.encode_fake_image(v, 8, 8)
-                    payloads.append(p)
-                yield pd.DataFrame(
-                    {"vec_id": pdf["vec_id"], "payload": payloads}
-                )
-
-        from pyspark.sql import types as T
-
-        schema = T.StructType(
-            [
-                T.StructField("vec_id", T.LongType()),
-                T.StructField("payload", T.BinaryType()),
-            ]
-        )
-        return emb.mapInPandas(enc, schema)
+        return _payloads(_tbl(spark, sf, "embeddings").select("vec_id"), enc)
 
     def image_ahash(spark, sf):
         # perceptual average-hash signatures over the fixture images
@@ -2926,35 +2922,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         )
 
     def multimodal_meta(spark, sf):
-        from collections.abc import Iterator
-
-        import pandas as pd
-        from pyspark.sql import types as T
-
-        emb = _tbl(spark, sf, "embeddings").select("vec_id", "label")
-
-        def enc(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in it:
-                yield pd.DataFrame(
-                    {
-                        "vec_id": pdf["vec_id"],
-                        "payload": [
-                            multimodal.encode_fake_image(
-                                int(v), int(l) % 16 + 1, int(v) % 8 + 1
-                            )
-                            for v, l in zip(pdf["vec_id"], pdf["label"])
-                        ],
-                    }
-                )
-
-        schema = T.StructType(
-            [
-                T.StructField("vec_id", T.LongType()),
-                T.StructField("payload", T.BinaryType()),
-            ]
-        )
-        payloads = emb.mapInPandas(enc, schema)
-        return multimodal.extract_metadata(payloads)
+        return multimodal.extract_metadata(_fake_images(spark, sf))
 
     def multimodal_jpeg_meta(spark, sf):
         # REAL JPEG bytes through the metadata scan: payload dims are
@@ -2962,49 +2930,33 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # parsed header values without needing a decoder. Pixels are a
         # deterministic gradient; the codec is kernels/jpeg.py (closes
         # the reference's .jpg whitelist, scripts/ExtractX_OCR.py:72).
-        from collections.abc import Iterator
-
         import numpy as np
-        import pandas as pd
-        from pyspark.sql import types as T
+
+        from ocr_spark.kernels.jpeg import encode_jpeg
 
         emb = _tbl(spark, sf, "embeddings").select("vec_id").filter(
             F.col("vec_id") < 200
         )
 
-        def enc(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            from ocr_spark.kernels.jpeg import encode_jpeg
+        def enc(v: int) -> bytes:
+            w, h = v % 24 + 8, v % 16 + 8
+            img = np.minimum(
+                np.add.outer(np.arange(h) * 3, np.arange(w) * 2) + v,
+                255,
+            ).astype(np.uint8)
+            # component matrix: vec_id%3 walks gray / RGB / CMYK
+            # (the CMYK leg stores YCCK behind an APP14 Adobe
+            # marker — the office-scanner shape, kernels/jpeg.py)
+            m = v % 3
+            if m == 1:
+                img = np.stack([img, img // 2, 255 - img], axis=2)
+            elif m == 2:
+                img = np.stack(
+                    [img, 255 - img, img // 2, img // 3], axis=2
+                )
+            return encode_jpeg(img, quality=90, adobe_transform=2)
 
-            for pdf in it:
-                payloads = []
-                for v in pdf["vec_id"]:
-                    w, h = int(v) % 24 + 8, int(v) % 16 + 8
-                    img = np.minimum(
-                        np.add.outer(np.arange(h) * 3, np.arange(w) * 2) + int(v),
-                        255,
-                    ).astype(np.uint8)
-                    # component matrix: vec_id%3 walks gray / RGB / CMYK
-                    # (the CMYK leg stores YCCK behind an APP14 Adobe
-                    # marker — the office-scanner shape, kernels/jpeg.py)
-                    m = int(v) % 3
-                    if m == 1:
-                        img = np.stack([img, img // 2, 255 - img], axis=2)
-                    elif m == 2:
-                        img = np.stack(
-                            [img, 255 - img, img // 2, img // 3], axis=2
-                        )
-                    payloads.append(
-                        encode_jpeg(img, quality=90, adobe_transform=2)
-                    )
-                yield pd.DataFrame({"vec_id": pdf["vec_id"], "payload": payloads})
-
-        schema = T.StructType(
-            [
-                T.StructField("vec_id", T.LongType()),
-                T.StructField("payload", T.BinaryType()),
-            ]
-        )
-        return multimodal.extract_metadata(emb.mapInPandas(enc, schema)).select(
+        return multimodal.extract_metadata(_payloads(emb, enc)).select(
             "vec_id", "fmt", "width", "height", "channels", "valid"
         )
 
@@ -3021,47 +2973,29 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # oracle replays the decoded checksums arithmetically. Even
         # vec_ids store frame 0 interlaced — rw_sum (position-weighted)
         # catches a broken de-interlace that plain px_sum cannot.
-        from collections.abc import Iterator
-
         import numpy as np
-        import pandas as pd
-        from pyspark.sql import types as T
+
+        from ocr_spark.kernels.gif import encode_gif
 
         emb = _tbl(spark, sf, "embeddings").select("vec_id").filter(
             F.col("vec_id") < 200
         )
 
-        def enc(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            from ocr_spark.kernels.gif import encode_gif
-
-            pal = np.array(
-                [[i * 32, 255 - i * 32, i * 16] for i in range(8)],
-                dtype=np.uint8,
-            )
-            for pdf in it:
-                payloads = []
-                for v in pdf["vec_id"]:
-                    v = int(v)
-                    w, h, nf = v % 21 + 6, v % 13 + 5, v % 3 + 1
-                    grid = np.add.outer(3 * np.arange(h), np.arange(w))
-                    frames = [
-                        ((v + 7 * f + grid) % 8).astype(np.uint8)
-                        for f in range(nf)
-                    ]
-                    payloads.append(
-                        encode_gif(frames, pal, interlace_first=(v % 2 == 0))
-                    )
-                yield pd.DataFrame(
-                    {"vec_id": pdf["vec_id"], "payload": payloads}
-                )
-
-        schema = T.StructType(
-            [
-                T.StructField("vec_id", T.LongType()),
-                T.StructField("payload", T.BinaryType()),
-            ]
+        pal = np.array(
+            [[i * 32, 255 - i * 32, i * 16] for i in range(8)],
+            dtype=np.uint8,
         )
-        return multimodal.gif_meta_scan(emb.mapInPandas(enc, schema))
+
+        def enc(v: int) -> bytes:
+            w, h, nf = v % 21 + 6, v % 13 + 5, v % 3 + 1
+            grid = np.add.outer(3 * np.arange(h), np.arange(w))
+            frames = [
+                ((v + 7 * f + grid) % 8).astype(np.uint8)
+                for f in range(nf)
+            ]
+            return encode_gif(frames, pal, interlace_first=(v % 2 == 0))
+
+        return multimodal.gif_meta_scan(_payloads(emb, enc))
 
     def multimodal_bmp_meta(spark, sf):
         # REAL BMP bytes (8-bit palette / 24-bit BGR, bottom-up AND
@@ -3070,59 +3004,43 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # expressions, so the oracle replays the decoded checksums
         # arithmetically; vec_id % 41 == 0 payloads are truncated to
         # exercise the valid=false degrade path
-        from collections.abc import Iterator
-
         import numpy as np
-        import pandas as pd
-        from pyspark.sql import types as T
+
+        from ocr_spark.kernels.bmp import encode_bmp
 
         emb = _tbl(spark, sf, "embeddings").select("vec_id").filter(
             F.col("vec_id") < 200
         )
 
-        def enc(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            from ocr_spark.kernels.bmp import encode_bmp
-
-            pal = np.array(
-                [[i * 16, 255 - i * 16, (i * 37) % 256] for i in range(16)],
-                dtype=np.uint8,
-            )
-            for pdf in it:
-                payloads = []
-                for v in pdf["vec_id"]:
-                    v = int(v)
-                    w, h = v % 17 + 5, v % 9 + 4
-                    y = np.arange(h)[:, None]
-                    x = np.arange(w)[None, :]
-                    if v % 2 == 0:
-                        px = ((v + 3 * y + x) % 16).astype(np.uint8)
-                        data = encode_bmp(
-                            px, palette=pal, top_down=(v % 3 == 0)
-                        )
-                    else:
-                        px = np.stack(
-                            [
-                                (v + 3 * y + x) % 251,
-                                (v + 5 * y + 2 * x) % 251,
-                                (v + 7 * y + 3 * x) % 251,
-                            ],
-                            axis=2,
-                        ).astype(np.uint8)
-                        data = encode_bmp(px, top_down=(v % 3 == 0))
-                    if v % 41 == 0:
-                        data = data[: len(data) // 2]
-                    payloads.append(data)
-                yield pd.DataFrame(
-                    {"vec_id": pdf["vec_id"], "payload": payloads}
-                )
-
-        schema = T.StructType(
-            [
-                T.StructField("vec_id", T.LongType()),
-                T.StructField("payload", T.BinaryType()),
-            ]
+        pal = np.array(
+            [[i * 16, 255 - i * 16, (i * 37) % 256] for i in range(16)],
+            dtype=np.uint8,
         )
-        return multimodal.bmp_meta_scan(emb.mapInPandas(enc, schema))
+
+        def enc(v: int) -> bytes:
+            w, h = v % 17 + 5, v % 9 + 4
+            y = np.arange(h)[:, None]
+            x = np.arange(w)[None, :]
+            if v % 2 == 0:
+                px = ((v + 3 * y + x) % 16).astype(np.uint8)
+                data = encode_bmp(
+                    px, palette=pal, top_down=(v % 3 == 0)
+                )
+            else:
+                px = np.stack(
+                    [
+                        (v + 3 * y + x) % 251,
+                        (v + 5 * y + 2 * x) % 251,
+                        (v + 7 * y + 3 * x) % 251,
+                    ],
+                    axis=2,
+                ).astype(np.uint8)
+                data = encode_bmp(px, top_down=(v % 3 == 0))
+            if v % 41 == 0:
+                data = data[: len(data) // 2]
+            return data
+
+        return multimodal.bmp_meta_scan(_payloads(emb, enc))
 
     def multimodal_tiff_meta(spark, sf):
         # REAL TIFF bytes (kernels/tiff.py) through the full strip-walk
@@ -3130,50 +3048,31 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # CCITT-G4-bilevel, vec_id%2 walks II/MM byte order, vec_id%5==0
         # splits into 4-row strips. Pixels are pure functions of
         # (vec_id, y, x) so both checksums replay arithmetically.
-        from collections.abc import Iterator
-
         import numpy as np
-        import pandas as pd
-        from pyspark.sql import types as T
+
+        from ocr_spark.kernels.tiff import write_tiff
 
         emb = _tbl(spark, sf, "embeddings").select("vec_id").filter(
             F.col("vec_id") < 200
         )
 
-        def enc(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            from ocr_spark.kernels.tiff import write_tiff
+        def enc(v: int) -> bytes:
+            w, h, md = v % 19 + 7, v % 11 + 6, v % 3
+            grid = v + np.add.outer(3 * np.arange(h), np.arange(w))
+            if md == 2:
+                px = (grid % 5 == 0).astype(np.uint8)
+                comp = 4
+            else:
+                px = (grid % 251).astype(np.uint8)
+                comp = 1 if md == 0 else 32773
+            return write_tiff(
+                px,
+                compression=comp,
+                rows_per_strip=4 if v % 5 == 0 else None,
+                big_endian=(v % 2 == 0),
+            )
 
-            for pdf in it:
-                payloads = []
-                for v in pdf["vec_id"]:
-                    v = int(v)
-                    w, h, md = v % 19 + 7, v % 11 + 6, v % 3
-                    grid = v + np.add.outer(3 * np.arange(h), np.arange(w))
-                    if md == 2:
-                        px = (grid % 5 == 0).astype(np.uint8)
-                        comp = 4
-                    else:
-                        px = (grid % 251).astype(np.uint8)
-                        comp = 1 if md == 0 else 32773
-                    payloads.append(
-                        write_tiff(
-                            px,
-                            compression=comp,
-                            rows_per_strip=4 if v % 5 == 0 else None,
-                            big_endian=(v % 2 == 0),
-                        )
-                    )
-                yield pd.DataFrame(
-                    {"vec_id": pdf["vec_id"], "payload": payloads}
-                )
-
-        schema = T.StructType(
-            [
-                T.StructField("vec_id", T.LongType()),
-                T.StructField("payload", T.BinaryType()),
-            ]
-        )
-        return multimodal.tiff_meta_scan(emb.mapInPandas(enc, schema))
+        return multimodal.tiff_meta_scan(_payloads(emb, enc))
 
     def multimodal_g711_meta(spark, sf):
         # REAL G.711 WAV containers (kernels/wav.py fmt 7/6) through
@@ -3182,83 +3081,46 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # oracle replays the CCITT expansion formulas arithmetically.
         # IMA ADPCM (fmt 0x11) is sequential-state and therefore
         # pytest-pinned instead (tests/test_audio_video.py).
-        from collections.abc import Iterator
-
         import hashlib
 
-        import pandas as pd
-        from pyspark.sql import types as T
+        from ocr_spark.kernels.wav import encode_g711_wav
 
         emb = _tbl(spark, sf, "embeddings").select("vec_id").filter(
             F.col("vec_id") < 200
         )
 
-        def enc(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            from ocr_spark.kernels.wav import encode_g711_wav
+        def enc(v: int) -> bytes:
+            n = v % 40 + 8
+            blocks = b"".join(
+                hashlib.md5(f"g711:{v}:{blk}".encode()).digest()
+                for blk in range((n + 15) // 16)
+            )
+            return encode_g711_wav(
+                blocks[:n],
+                law="mu" if v % 2 == 0 else "a",
+                rate=8000,
+            )
 
-            for pdf in it:
-                payloads = []
-                for v in pdf["vec_id"]:
-                    v = int(v)
-                    n = v % 40 + 8
-                    blocks = b"".join(
-                        hashlib.md5(f"g711:{v}:{blk}".encode()).digest()
-                        for blk in range((n + 15) // 16)
-                    )
-                    payloads.append(
-                        encode_g711_wav(
-                            blocks[:n],
-                            law="mu" if v % 2 == 0 else "a",
-                            rate=8000,
-                        )
-                    )
-                yield pd.DataFrame(
-                    {"vec_id": pdf["vec_id"], "payload": payloads}
-                )
-
-        schema = T.StructType(
-            [
-                T.StructField("vec_id", T.LongType()),
-                T.StructField("payload", T.BinaryType()),
-            ]
-        )
-        return multimodal.audio_codec_scan(emb.mapInPandas(enc, schema))
+        return multimodal.audio_codec_scan(_payloads(emb, enc))
 
     def multimodal_audio_meta(spark, sf):
         # REAL PCM WAV containers through the header-only metadata scan:
         # every field is a pure function of vec_id, so the oracle checks
         # the RIFF parse without a decoder (kernels/wav.py)
-        from collections.abc import Iterator
-
         import numpy as np
-        import pandas as pd
-        from pyspark.sql import types as T
+
+        from ocr_spark.kernels.wav import encode_wav
 
         emb = _tbl(spark, sf, "embeddings").select("vec_id").filter(
             F.col("vec_id") < 300
         )
 
-        def enc(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            from ocr_spark.kernels.wav import encode_wav
+        def enc(v: int) -> bytes:
+            n, ch = v % 50 + 10, v % 2 + 1
+            samples = np.zeros((n, ch), dtype=np.int16)
+            return encode_wav(samples, rate=8000 + (v % 8) * 1000)
 
-            for pdf in it:
-                payloads = []
-                for v in pdf["vec_id"]:
-                    v = int(v)
-                    n, ch = v % 50 + 10, v % 2 + 1
-                    samples = np.zeros((n, ch), dtype=np.int16)
-                    payloads.append(
-                        encode_wav(samples, rate=8000 + (v % 8) * 1000)
-                    )
-                yield pd.DataFrame({"vec_id": pdf["vec_id"], "payload": payloads})
-
-        schema = T.StructType(
-            [
-                T.StructField("vec_id", T.LongType()),
-                T.StructField("payload", T.BinaryType()),
-            ]
-        )
-        return multimodal.audio_meta(emb.mapInPandas(enc, schema))
+        return multimodal.audio_meta(_payloads(emb, enc))
 
     def _wav_fixture(spark, sf):
         # REAL WAV payloads with md5-derived mono int16 samples (sample
@@ -3266,41 +3128,26 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # block i//8) — the image md5-pixel trick widened to 16-bit
         # audio, so oracles recompute exact samples from md5() hex.
         # Shared by audio_features and audio_segments.
-        from collections.abc import Iterator
-
         import hashlib
 
         import numpy as np
-        import pandas as pd
-        from pyspark.sql import types as T
+
+        from ocr_spark.kernels.wav import encode_wav
 
         emb = _tbl(spark, sf, "embeddings").select("vec_id").filter(
             F.col("vec_id") < 200
         )
 
-        def enc(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            from ocr_spark.kernels.wav import encode_wav
+        def enc(v: int) -> bytes:
+            n = v % 40 + 8
+            raw = b"".join(
+                hashlib.md5(f"wav:{v}:{blk}".encode()).digest()
+                for blk in range((2 * n + 15) // 16)
+            )[: 2 * n]
+            samples = np.frombuffer(raw, dtype="<i2").copy()
+            return encode_wav(samples, rate=16000)
 
-            for pdf in it:
-                payloads = []
-                for v in pdf["vec_id"]:
-                    v = int(v)
-                    n = v % 40 + 8
-                    raw = b"".join(
-                        hashlib.md5(f"wav:{v}:{blk}".encode()).digest()
-                        for blk in range((2 * n + 15) // 16)
-                    )[: 2 * n]
-                    samples = np.frombuffer(raw, dtype="<i2").copy()
-                    payloads.append(encode_wav(samples, rate=16000))
-                yield pd.DataFrame({"vec_id": pdf["vec_id"], "payload": payloads})
-
-        schema = T.StructType(
-            [
-                T.StructField("vec_id", T.LongType()),
-                T.StructField("payload", T.BinaryType()),
-            ]
-        )
-        return emb.mapInPandas(enc, schema)
+        return _payloads(emb, enc)
 
     def multimodal_audio_features(spark, sf):
         return multimodal.audio_features(_wav_fixture(spark, sf)).select(
@@ -3318,41 +3165,26 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # levels), so frame means are integer-exact and the oracles
         # compute them arithmetically from (vec_id, frame_idx). Shared
         # by video_frame_sample and video_scene_cuts.
-        from collections.abc import Iterator
-
         import numpy as np
-        import pandas as pd
-        from pyspark.sql import types as T
+
+        from ocr_spark.kernels.jpeg import encode_jpeg
 
         emb = _tbl(spark, sf, "embeddings").select("vec_id").filter(
             F.col("vec_id") < 150
         )
 
-        def enc(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            from ocr_spark.kernels.jpeg import encode_jpeg
-
-            for pdf in it:
-                payloads = []
-                for v in pdf["vec_id"]:
-                    v = int(v)
-                    w, h = v % 16 + 8, v % 8 + 8
-                    frames = [
-                        encode_jpeg(
-                            np.full((h, w), (v * 7 + f * 13) % 256, np.uint8),
-                            quality=90,
-                        )
-                        for f in range(v % 4 + 2)
-                    ]
-                    payloads.append(b"".join(frames))
-                yield pd.DataFrame({"vec_id": pdf["vec_id"], "payload": payloads})
-
-        schema = T.StructType(
-            [
-                T.StructField("vec_id", T.LongType()),
-                T.StructField("payload", T.BinaryType()),
+        def enc(v: int) -> bytes:
+            w, h = v % 16 + 8, v % 8 + 8
+            frames = [
+                encode_jpeg(
+                    np.full((h, w), (v * 7 + f * 13) % 256, np.uint8),
+                    quality=90,
+                )
+                for f in range(v % 4 + 2)
             ]
-        )
-        return emb.mapInPandas(enc, schema)
+            return b"".join(frames)
+
+        return _payloads(emb, enc)
 
     def multimodal_video_cuts(spark, sf):
         # scene cuts: EVERY frame decoded, cut where the mean-pixel jump
@@ -4019,6 +3851,17 @@ _TURNS_SQL = (
     f"  WHEN (doc_id // 97) % 7 IN (3, 4) THEN '{_TURNS_RETRY_TEXT}'"
     "  ELSE text END AS text"
     " FROM documents)"
+)
+
+#: the oracles' blank test of a possibly-NULL text, one definition with
+#: the Spark side (ocr_spark.operators.transcript.is_blank)
+_BLANK_NULL_TEXT = _blank_sql("coalesce(text, '')")
+#: SQL twin of queries()._non_ascii_blanks, over a frame's text column,
+#: and _TURNS_SQL with it applied
+_NBSP_TEXT = f"CASE WHEN text = '' THEN '{_NBSP_BLANK}' ELSE text END AS text"
+_NBSP_TURNS_SQL = (
+    _TURNS_SQL.replace("turns AS (", "turns0 AS (", 1)
+    + f", turns AS (SELECT conv_id, turn_idx, role, {_NBSP_TEXT} FROM turns0)"
 )
 
 
@@ -6940,7 +6783,7 @@ def oracle_sql() -> dict[str, str]:
         # previous turn collapse keep-first; survivors renumber densely
         "transcript_clean": (
             "WITH " + _TURNS_SQL + ","
-            " nb AS (SELECT * FROM turns WHERE trim(text) <> ''),"
+            f" nb AS (SELECT * FROM turns WHERE NOT {_blank_sql('text')}),"
             " fl AS (SELECT conv_id, turn_idx, role, text,"
             "  lag(role) OVER w AS pr, lag(text) OVER w AS pt FROM nb"
             "  WINDOW w AS (PARTITION BY conv_id ORDER BY turn_idx)),"
@@ -6970,7 +6813,7 @@ def oracle_sql() -> dict[str, str]:
         "loss_mask_spans": (
             "WITH " + _TURNS_SQL + ","
             " tk AS (SELECT conv_id, turn_idx, role,"
-            "  CASE WHEN trim(text) = '' THEN 0"
+            f"  CASE WHEN {_blank_sql('text')} THEN 0"
             "   ELSE len(string_split(text, ' ')) END AS tok FROM turns),"
             " s AS (SELECT conv_id, turn_idx, role, tok,"
             "  COALESCE(CAST(SUM(tok) OVER (PARTITION BY conv_id"
@@ -6985,7 +6828,7 @@ def oracle_sql() -> dict[str, str]:
         "context_window_trim": (
             "WITH " + _TURNS_SQL + ","
             " tk AS (SELECT conv_id, turn_idx, role,"
-            "  CAST(CASE WHEN trim(text) = '' THEN 0"
+            f"  CAST(CASE WHEN {_blank_sql('text')} THEN 0"
             "   ELSE len(string_split(text, ' ')) END AS BIGINT) AS n_tokens"
             "  FROM turns),"
             " s AS (SELECT conv_id, turn_idx, role, n_tokens,"
@@ -7041,13 +6884,13 @@ def oracle_sql() -> dict[str, str]:
         ),
         # cross-conversation boilerplate: per-turn md5 digests (text
         # never shuffles), distinct-conv counts, flag at >= 5 convs;
-        # blank (NULL/whitespace-only) turns never count and always read
+        # blank (NULL/space-separator-only) turns never count and always read
         # n_convs = 0
         "turn_boilerplate": (
-            "WITH " + _TURNS_SQL + ","
+            "WITH " + _NBSP_TURNS_SQL + ","
             " b AS (SELECT conv_id, turn_idx, role,"
             "  md5(coalesce(text, '')) AS dig,"
-            "  trim(coalesce(text, '')) = '' AS blank FROM turns),"
+            f"  {_BLANK_NULL_TEXT} AS blank FROM turns),"
             " c AS (SELECT dig, CAST(COUNT(DISTINCT conv_id) AS BIGINT)"
             "   AS n FROM b WHERE NOT blank GROUP BY dig)"
             " SELECT b.conv_id, b.turn_idx, b.role,"
@@ -7081,14 +6924,15 @@ def oracle_sql() -> dict[str, str]:
         # refusal-injected corpus
         "conversation_tiers": (
             "WITH " + _TURNS_SQL + ","
-            " inj AS (SELECT conv_id, turn_idx, role,"
+            " inj0 AS (SELECT conv_id, turn_idx, role,"
             f"  {_REFUSAL_INJ_SQL} AS text FROM turns),"
+            f" inj AS (SELECT conv_id, turn_idx, role, {_NBSP_TEXT} FROM inj0),"
             " raw AS (SELECT conv_id,"
             "  CAST(COUNT(*) AS BIGINT) AS n_turns,"
-            "  CAST(SUM(CASE WHEN trim(coalesce(text, '')) = ''"
+            f"  CAST(SUM(CASE WHEN {_BLANK_NULL_TEXT}"
             "   THEN 1 ELSE 0 END) AS BIGINT) AS n_blank"
             "  FROM inj GROUP BY conv_id),"
-            " nb AS (SELECT * FROM inj WHERE trim(text) <> ''),"
+            f" nb AS (SELECT * FROM inj WHERE NOT {_blank_sql('text')}),"
             " fl AS (SELECT conv_id, turn_idx, role, text,"
             "  lag(role) OVER w AS pr, lag(text) OVER w AS pt FROM nb"
             "  WINDOW w AS (PARTITION BY conv_id ORDER BY turn_idx)),"
@@ -7174,7 +7018,7 @@ def oracle_sql() -> dict[str, str]:
         "turn_novelty": (
             "WITH " + _TURNS_SQL + ","
             " b AS (SELECT conv_id, turn_idx,"
-            "  CASE WHEN trim(text) = '' THEN []::VARCHAR[]"
+            f"  CASE WHEN {_blank_sql('text')} THEN []::VARCHAR[]"
             "   ELSE string_split(text, ' ') END AS ts FROM turns),"
             " w AS (SELECT conv_id, turn_idx,"
             "  md5(array_to_string(ts[CAST(u.i AS INT):"
@@ -7244,9 +7088,9 @@ def oracle_sql() -> dict[str, str]:
         "context_cost": (
             "WITH " + _TURNS_SQL + ","
             " p AS (SELECT conv_id, role,"
-            "  CAST(CASE WHEN trim(text) = '' THEN 0"
+            f"  CAST(CASE WHEN {_blank_sql('text')} THEN 0"
             "   ELSE len(string_split(text, ' ')) END AS BIGINT) AS tok,"
-            "  CAST(COALESCE(SUM(CASE WHEN trim(text) = '' THEN 0"
+            f"  CAST(COALESCE(SUM(CASE WHEN {_blank_sql('text')} THEN 0"
             "    ELSE len(string_split(text, ' ')) END)"
             "   OVER (PARTITION BY conv_id ORDER BY turn_idx"
             "    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING),"
@@ -7269,7 +7113,7 @@ def oracle_sql() -> dict[str, str]:
             " rd AS (SELECT conv_id, string_agg('<|im_start|>' || coalesce(role, '') || chr(10) || coalesce(text, '') || '<|im_end|>' || chr(10), '' ORDER BY turn_idx) AS rendered"
             "  FROM turns GROUP BY conv_id),"
             " b AS (SELECT conv_id,"
-            "  CAST(CASE WHEN trim(rendered) = '' THEN 0"
+            f"  CAST(CASE WHEN {_blank_sql('rendered')} THEN 0"
             "   ELSE len(string_split(rendered, ' ')) END AS BIGINT)"
             "   AS n_tokens, md5(conv_id) AS k FROM rd),"
             " p AS (SELECT conv_id, n_tokens,"
@@ -7288,13 +7132,13 @@ def oracle_sql() -> dict[str, str]:
         # counts over >= 5 distinct convs), ChatML render, rendered
         # 5-gram overlap vs the ev_ clone set
         "transcript_decontaminate": (
-            "WITH " + _TURNS_SQL + ","
+            "WITH " + _NBSP_TURNS_SQL + ","
             " ev AS (SELECT 'ev_' || substr(conv_id, 6, 4) AS conv_id,"
             "  turn_idx, role, text FROM turns"
             "  WHERE CAST(substr(conv_id, 6, 4) AS INT) % 13 = 0),"
             " cmask AS (SELECT md5(coalesce(text, '')) AS dig,"
             "  COUNT(DISTINCT conv_id) AS nc FROM turns"
-            "  WHERE trim(coalesce(text, '')) <> '' GROUP BY 1),"
+            f"  WHERE NOT {_BLANK_NULL_TEXT} GROUP BY 1),"
             " ckept AS (SELECT t.conv_id, t.turn_idx, t.role, t.text"
             "  FROM turns t LEFT JOIN cmask m"
             "   ON m.dig = md5(coalesce(t.text, ''))"
@@ -7303,7 +7147,7 @@ def oracle_sql() -> dict[str, str]:
             "  FROM ckept GROUP BY conv_id),"
             " emask AS (SELECT md5(coalesce(text, '')) AS dig,"
             "  COUNT(DISTINCT conv_id) AS nc FROM ev"
-            "  WHERE trim(coalesce(text, '')) <> '' GROUP BY 1),"
+            f"  WHERE NOT {_BLANK_NULL_TEXT} GROUP BY 1),"
             " ekept AS (SELECT t.conv_id, t.turn_idx, t.role, t.text"
             "  FROM ev t LEFT JOIN emask m"
             "   ON m.dig = md5(coalesce(t.text, ''))"
@@ -7328,7 +7172,7 @@ def oracle_sql() -> dict[str, str]:
         "sft_manifest": (
             "WITH " + _TURNS_SQL + ","
             " nb AS (SELECT conv_id, turn_idx, role, text FROM turns"
-            "  WHERE trim(text) <> ''),"
+            f"  WHERE NOT {_blank_sql('text')}),"
             " lg AS (SELECT conv_id, turn_idx, role, text,"
             "  lag(role) OVER w AS pr, lag(text) OVER w AS pt FROM nb"
             "  WINDOW w AS (PARTITION BY conv_id ORDER BY turn_idx)),"
@@ -7364,7 +7208,7 @@ def oracle_sql() -> dict[str, str]:
             f"  CAST(((md5_number(conv_id) % {_SFT_SHARDS})"
             f"    + {_SFT_SHARDS}) % {_SFT_SHARDS} AS INT)"
             "   AS shard,"
-            "  CAST(CASE WHEN trim(rendered) = '' THEN 0"
+            f"  CAST(CASE WHEN {_blank_sql('rendered')} THEN 0"
             "   ELSE len(string_split(rendered, ' ')) END AS BIGINT)"
             "   AS n_tokens FROM tr),"
             " o AS (SELECT conv_id, shard, n_tokens,"
@@ -7412,10 +7256,10 @@ def oracle_sql() -> dict[str, str]:
             "   AS BIGINT) AS n_user,"
             "  CAST(SUM(CASE WHEN role = 'assistant' THEN 1 ELSE 0 END)"
             "   AS BIGINT) AS n_assistant,"
-            "  CAST(SUM(CASE WHEN role = 'user' AND trim(text) <> ''"
+            f"  CAST(SUM(CASE WHEN role = 'user' AND NOT {_blank_sql('text')}"
             "   THEN len(string_split(text, ' ')) ELSE 0 END)"
             "   AS BIGINT) AS user_tokens,"
-            "  CAST(SUM(CASE WHEN role = 'assistant' AND trim(text) <> ''"
+            f"  CAST(SUM(CASE WHEN role = 'assistant' AND NOT {_blank_sql('text')}"
             "   THEN len(string_split(text, ' ')) ELSE 0 END)"
             "   AS BIGINT) AS assistant_tokens"
             "  FROM turns GROUP BY conv_id)"
@@ -7490,7 +7334,7 @@ def oracle_sql() -> dict[str, str]:
         "preference_length_bias": (
             _PREF_CHAIN
             + ", tk AS (SELECT conv_id, turn_idx,"
-            "  CAST(CASE WHEN trim(response) = '' THEN 0"
+            f"  CAST(CASE WHEN {_blank_sql('response')} THEN 0"
             "   ELSE len(string_split(response, ' ')) END AS BIGINT)"
             "   AS nt FROM qa),"
             " pb AS (SELECT tc.nt - tr.nt AS delta"

@@ -304,8 +304,3 @@ def decode_gif(data: bytes) -> GifImage:
         raise GifError("no image data blocks")
     return img
 
-
-def gif_meta(data: bytes) -> tuple[str, int, int, int, int]:
-    """(version, width, height, n_frames, palette_size) via full decode."""
-    img = decode_gif(data)
-    return (img.version, img.width, img.height, img.n_frames, len(img.palette))

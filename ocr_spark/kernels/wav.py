@@ -94,17 +94,6 @@ def alaw_decode(data: bytes) -> np.ndarray:
     return _ALAW[np.frombuffer(data, dtype=np.uint8)]
 
 
-def _g711_encode(samples: np.ndarray, law: str) -> bytes:
-    """linear2ulaw / linear2alaw by exhaustive nearest-table match —
-    fixture-grade (256-entry argmin per distinct sample, vectorized);
-    exact inverse of the decode tables on their own output."""
-    table = _MULAW if law == "mu" else _ALAW
-    s = np.asarray(samples, dtype=np.int32)
-    # distance to each code's decoded value; ties pick the lowest byte
-    d = np.abs(s[:, None] - table[None, :].astype(np.int32))
-    return np.argmin(d, axis=1).astype(np.uint8).tobytes()
-
-
 # --------------------------------------------------------- IMA ADPCM
 
 _IMA_STEPS = np.array(

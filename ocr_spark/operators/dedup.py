@@ -36,6 +36,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ocr_spark.worker import python_stage
+
 DEFAULT_NUM_HASHES = 16
 DEFAULT_BAND_SIZE = 4
 DEFAULT_SHINGLE_N = 3  # signature + verify share the same shingle unit
@@ -120,6 +122,7 @@ def _shingle_set(text: str, n: int) -> set[str]:
 
 
 def _minhash_batch(num_hashes: int, ngram: int = DEFAULT_SHINGLE_N):
+    @python_stage
     def fn(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         # built here, not in the closure: hashlib contexts don't pickle
         prefixes = [hashlib.md5(f"{i}:".encode()) for i in range(num_hashes)]
@@ -625,6 +628,7 @@ def embedding_cosine_dedup_lsh(
     )
 
 
+@python_stage
 def _simhash_batch(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     for pdf in it:
         texts = pdf["text"].tolist()

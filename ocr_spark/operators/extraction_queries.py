@@ -22,6 +22,7 @@ from pyspark.sql.pandas.functions import pandas_udf
 from ocr_spark.kernels.grid import encode_grid_payload, extract_grid_table, render_grid
 from ocr_spark.kernels.htmlstrip import strip_html
 from ocr_spark.kernels.salvage import salvage_json
+from ocr_spark.worker import python_stage
 
 # -- HTML ------------------------------------------------------------------
 
@@ -38,6 +39,7 @@ _HTML_POST = (
 
 
 @pandas_udf(T.StringType())
+@python_stage
 def _strip_html_udf(s: pd.Series) -> pd.Series:
     return s.map(strip_html)
 
@@ -58,6 +60,7 @@ def extract_html_query(df: DataFrame) -> DataFrame:
 
 
 @pandas_udf(T.ArrayType(T.StringType()))
+@python_stage
 def _salvage_first_row_udf(s: pd.Series) -> pd.Series:
     def fn(reply: str) -> list:
         data = salvage_json(reply)
@@ -116,6 +119,7 @@ def _grid_query(
     kernels.grid.stitch_tables merges cross-page continuations, adding
     an ``n_tables`` column to the output."""
 
+    @python_stage
     def roundtrip(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         import numpy as np
 
@@ -288,6 +292,7 @@ def _pdf_image_roundtrip_batches(
         yield pd.DataFrame(out, columns=["doc_id", "cells_text"])
 
 
+@python_stage
 def _pdf_image_roundtrip(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     # DCTDecode page scan — the daat12221.pdf layout
     return _pdf_image_roundtrip_batches(
@@ -295,6 +300,7 @@ def _pdf_image_roundtrip(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     )
 
 
+@python_stage
 def _pdf_ccitt_roundtrip(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     # doc_id%4 walks the fax family: G4, G4 /EncodedByteAlign, G3 pure
     # 1-D (/K 0), G3 mixed 2-D (/K 4, EOL framing) — all four
@@ -348,6 +354,7 @@ def pdf_image_extract_query(df: DataFrame) -> DataFrame:
 
 
 @pandas_udf(T.StringType())
+@python_stage
 def _clean_udf(s: pd.Series) -> pd.Series:
     from ocr_spark.kernels.align import clean_null_tokens
 
@@ -372,6 +379,7 @@ def null_clean_query(df: DataFrame) -> DataFrame:
 
 
 @pandas_udf(T.StringType())
+@python_stage
 def _extract_json_turn_udf(s: pd.Series) -> pd.Series:
     from ocr_spark.kernels.extract import extract_turn
 
@@ -430,6 +438,7 @@ def extract_reading_order_query(df: DataFrame) -> DataFrame:
         rot90_payload,
     )
 
+    @python_stage
     def roundtrip(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
             out = []

@@ -27,6 +27,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ocr_spark.worker import python_stage
+
 MAGIC = b"IMG1"
 
 META_SCHEMA = T.StructType(
@@ -105,6 +107,7 @@ def parse_header(payload: bytes | None) -> tuple[str, int, int, int, bool]:
     return ("unknown", 0, 0, 0, False)
 
 
+@python_stage
 def _meta_batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     for pdf in it:
         metas = [parse_header(p) for p in pdf["payload"]]
@@ -203,6 +206,7 @@ def rotate_images(df: DataFrame, rotation: int) -> DataFrame:
         except Exception:
             return bytes(p)
 
+    @python_stage
     def fn(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
             yield pd.DataFrame(
@@ -228,6 +232,7 @@ FEAT_SCHEMA = T.StructType(
 def _feature_batches(target: tuple[int, int]):
     th, tw = target
 
+    @python_stage
     def fn(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
             means, hs, ws = [], [], []
@@ -286,6 +291,7 @@ def audio_meta(df: DataFrame) -> DataFrame:
     walk — no sample decode on the metadata scan path."""
     from ocr_spark.kernels.wav import parse_wav_header
 
+    @python_stage
     def fn(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
             rows = []
@@ -327,6 +333,7 @@ def audio_features(df: DataFrame) -> DataFrame:
     payload yields NaN features, never a failed job."""
     from ocr_spark.kernels.wav import decode_wav
 
+    @python_stage
     def fn(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
             rows = []
@@ -370,6 +377,7 @@ def video_frame_sample(df: DataFrame, every_n: int = 2) -> DataFrame:
     payloads contribute zero rows (skip-and-continue)."""
     from ocr_spark.kernels.jpeg import decode_jpeg, split_mjpeg
 
+    @python_stage
     def fn(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
             rows = []
@@ -452,6 +460,7 @@ def image_ahash(df: DataFrame, fake: bool = True) -> DataFrame:
     the parallel axis is images, decode runs once per image, nothing
     shuffles here (banding shuffles int keys downstream)."""
 
+    @python_stage
     def fn(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         hexd = "0123456789abcdef"
         for pdf in it:
@@ -572,6 +581,7 @@ def audio_segments(
     nothing shuffles until the (tiny) segment rows come out."""
     from ocr_spark.kernels.wav import decode_wav
 
+    @python_stage
     def fn(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
             rows = []
@@ -646,6 +656,7 @@ def video_scene_cuts(
     zero rows; the parallel axis is clips."""
     from ocr_spark.kernels.jpeg import decode_jpeg, split_mjpeg
 
+    @python_stage
     def fn(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
             rows = []
@@ -705,6 +716,7 @@ def gif_meta_scan(df: DataFrame) -> DataFrame:
         ]
     )
 
+    @python_stage
     def fn(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         from ocr_spark.kernels.gif import GifError, decode_gif
 
@@ -777,6 +789,7 @@ def tiff_meta_scan(df: DataFrame) -> DataFrame:
         ]
     )
 
+    @python_stage
     def fn(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         from ocr_spark.kernels.tiff import TiffError, read_tiff
 
@@ -844,6 +857,7 @@ def audio_codec_scan(df: DataFrame) -> DataFrame:
         ]
     )
 
+    @python_stage
     def fn(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         from ocr_spark.kernels.wav import _walk_wav, decode_wav
 
@@ -909,6 +923,7 @@ def bmp_meta_scan(df: DataFrame) -> DataFrame:
         ]
     )
 
+    @python_stage
     def fn(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         from ocr_spark.kernels.bmp import BmpError, decode_bmp
 

@@ -18,6 +18,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ocr_spark.worker import python_stage
+
 #: Multi-page payload separator (ASCII record separator).
 PAGE_SEP = "\x1e"
 
@@ -79,6 +81,7 @@ _ROT_SCHEMA = T.StructType(
 )
 
 
+@python_stage
 def _rot_roundtrip(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     import numpy as np
 
@@ -146,6 +149,7 @@ def pdf_pages_from_bytes(
 
     from ocr_spark.kernels.pdf import extract_pages
 
+    @python_stage
     def fn(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
             ids: list[int] = []
@@ -207,6 +211,7 @@ def pdf_images_from_bytes(
     images contribute zero rows (skip-and-continue)."""
     from ocr_spark.kernels.pdf import extract_images
 
+    @python_stage
     def fn(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
             rows: list[tuple] = []

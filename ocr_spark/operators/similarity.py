@@ -29,19 +29,13 @@ from pyspark.sql import functions as F
 from pyspark.sql.pandas.functions import pandas_udf
 from pyspark.sql.window import Window
 
+from ocr_spark.worker import python_stage
+
 
 def _dot(a: str, b: str):
     return F.expr(
         f"aggregate(zip_with({a}, {b}, (x, y) -> cast(x as double) * cast(y as double)),"
         f" cast(0.0 as double), (acc, v) -> acc + v)"
-    )
-
-
-def with_cosine(df: DataFrame, a: str, b: str, out: str = "cosine") -> DataFrame:
-    return df.withColumn(
-        out,
-        _dot(a, b)
-        / (F.sqrt(_dot(a, a)) * F.sqrt(_dot(b, b))),
     )
 
 
@@ -252,6 +246,7 @@ def _cell_assign_udf(centroids: np.ndarray):
     ct = centroids.T.copy()
 
     @pandas_udf("int")
+    @python_stage
     def assign(v: pd.Series) -> pd.Series:
         if len(v) == 0:
             return pd.Series([], dtype="int32")
@@ -460,6 +455,7 @@ def pq_encode_with_cells(
     ct = centroids.T.copy()
     books = codebooks.copy()
 
+    @python_stage
     def fn(it):
         for pdf in it:
             if len(pdf) == 0:
@@ -566,6 +562,7 @@ def ivf_pq_topk(
     }
 
     @pandas_udf("double")
+    @python_stage
     def adc_dot(q_id: pd.Series, codes: pd.Series) -> pd.Series:
         # vectorized per DISTINCT query in the batch (queries are few by
         # contract): one fancy-indexed LUT gather + row-sum per group —
@@ -930,6 +927,7 @@ def mmr_rerank(
         ]
     )
 
+    @python_stage
     def greedy(pdf):
         import pandas as pd
 

@@ -11,6 +11,8 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ocr_spark.worker import python_stage
+
 #: English function words used by the n-gram/stopword heuristics. Fixed —
 #: changing this list changes lang_id/quality_score semantics.
 STOPWORDS = (
@@ -262,6 +264,7 @@ def text_sanitize(df: DataFrame, col: str = "text") -> DataFrame:
     from pyspark.sql.pandas.functions import pandas_udf
 
     @pandas_udf("string")
+    @python_stage
     def _nfc(s: pd.Series) -> pd.Series:
         return s.map(
             lambda x: None if x is None else unicodedata.normalize("NFC", x)

@@ -44,6 +44,22 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+#: A text is blank when nothing is left after deleting the Unicode space
+#: separators (category Zs). DuckDB's ``trim`` strips all of them and
+#: Spark's only U+0020, so neither engine's ``trim`` decides blankness:
+#: both delete this one class with ``translate``.
+BLANK_CHARS = " \u00a0\u1680" + "".join(map(chr, range(0x2000, 0x200B))) + "\u202f\u205f\u3000"
+
+
+def is_blank(col: Column) -> Column:
+    """Whether ``col`` is blank; NULL stays NULL."""
+    return F.translate(col, BLANK_CHARS, "") == ""
+
+
+def blank_sql(expr: str) -> str:
+    """:func:`is_blank` as SQL text, for the DuckDB oracles."""
+    return f"(translate({expr}, '{BLANK_CHARS}', '') = '')"
+
 
 def _conv_window() -> Window:
     return Window.partitionBy("conv_id").orderBy("turn_idx")
@@ -91,7 +107,7 @@ def clean_turns(turns: DataFrame) -> DataFrame:
     its original turn_idx.  Both windows share the (conv_id, turn_idx)
     sort, so Catalyst plans a single exchange."""
     w = _conv_window()
-    nonblank = turns.filter(F.trim(F.col("text")) != "")
+    nonblank = turns.filter(~is_blank(F.col("text")))
     flagged = nonblank.select(
         "conv_id",
         "turn_idx",
@@ -154,7 +170,7 @@ def validate_roles(
 def _tok_count(col: Column) -> Column:
     # blank text is zero tokens (split('') yields one empty element in
     # BOTH engines; don't rely on it)
-    return F.when(F.trim(col) == "", F.lit(0)).otherwise(
+    return F.when(is_blank(col), F.lit(0)).otherwise(
         F.size(F.split(col, " "))
     ).cast("bigint")
 
@@ -312,7 +328,7 @@ def boilerplate_turns(turns: DataFrame, min_convs: int = 5) -> DataFrame:
     conversation structure intact (the C4 line-dedup idea lifted from
     lines-within-documents to turns-within-conversations).
 
-    Blank turns (NULL, empty or whitespace-only, the conversation_tiers
+    Blank turns (NULL, or :func:`is_blank`, the conversation_tiers
     rule) are never counted (clean_turns owns those), and NULL text
     hashes as '' on both engines.
 
@@ -326,7 +342,7 @@ def boilerplate_turns(turns: DataFrame, min_convs: int = 5) -> DataFrame:
         "turn_idx",
         "role",
         F.md5(F.coalesce(F.col("text"), F.lit(""))).alias("__dig"),
-        (F.trim(F.coalesce(F.col("text"), F.lit(""))) == "").alias("__blank"),
+        is_blank(F.coalesce(F.col("text"), F.lit(""))).alias("__blank"),
     )
     counts = (
         base.filter(~F.col("__blank"))
@@ -555,9 +571,7 @@ def conversation_tiers(turns: DataFrame) -> DataFrame:
     raw = turns.groupBy("conv_id").agg(
         F.count("*").cast("long").alias("n_turns"),
         F.sum(
-            (F.trim(F.coalesce(F.col("text"), F.lit(""))) == "").cast(
-                "long"
-            )
+            is_blank(F.coalesce(F.col("text"), F.lit(""))).cast("long")
         ).alias("n_blank"),
     )
     from ocr_spark.operators.dedup import _own_caches
@@ -883,7 +897,7 @@ def turn_novelty(
         "conv_id",
         "turn_idx",
         F.when(
-            F.trim(F.coalesce(F.col("text"), F.lit(""))) == "",
+            is_blank(F.coalesce(F.col("text"), F.lit(""))),
             F.expr("CAST(array() AS ARRAY<STRING>)"),
         )
         .otherwise(F.split(F.col("text"), " "))

@@ -56,6 +56,7 @@ from ocr_spark.kernels.extract import (
     extract_turn,
 )
 from ocr_spark.operators.relational import anti_join_unfinished
+from ocr_spark.worker import python_stage
 
 #: Default number of logical resume parts: purely the resume granularity
 #: (a finished part is never redone). At 10^12 turns this would be sized to
@@ -189,15 +190,6 @@ def turn_checksums(
     return pd.util.hash_pandas_object(joined, index=False).to_numpy(np.uint64)
 
 
-def turn_checksum(conv_id: str, turn_idx: int, text: str) -> int:
-    """Scalar convenience wrapper over :func:`turn_checksums`."""
-    return int(
-        turn_checksums(
-            pd.Series([conv_id]), pd.Series([turn_idx]), pd.Series([text])
-        )[0]
-    )
-
-
 def with_part_id(
     df: DataFrame,
     num_parts: int = DEFAULT_NUM_PARTS,
@@ -271,6 +263,7 @@ def _extract_batch_frame(pdf: pd.DataFrame) -> pd.DataFrame:
     )
 
 
+@python_stage
 def _extract_batches(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
     """The fused extraction kernel: one Arrow batch in, one out, plus one
     lineage row per logical part at end-of-partition.
@@ -381,6 +374,7 @@ def warmup_python_workers(df_or_spark) -> None:
     spark = df_or_spark if isinstance(df_or_spark, SparkSession) else df_or_spark.sparkSession
     cores = spark.sparkContext.defaultParallelism
 
+    @python_stage
     def _touch(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         import numpy as _np  # noqa: F401
         import pandas as _pd  # noqa: F401
@@ -417,10 +411,11 @@ def extract_stage(
     The logical parts run on ``min(num_parts, defaultParallelism)`` tasks,
     each a contiguous block of part ids, assigned directly (no second hash):
     no task is empty when parts ≥ tasks, and the stage runs in one wave, so
-    the fixed per-task Python cost (~0.2 s of CPU) is paid once per core,
-    not once per part. Lineage does not depend on this mapping, and part ids
-    are uniform hashes, so the salting still spreads hot conversations
-    across tasks.
+    the fixed per-task Python cost is paid once per core, not once per part
+    (its largest share, ~0.2 s of CPU, once per worker: see
+    :func:`ocr_spark.worker.python_stage`). Lineage does not depend on
+    this mapping, and part ids are uniform hashes, so the salting still
+    spreads hot conversations across tasks.
     """
     n_tasks = min(num_parts, df.sparkSession.sparkContext.defaultParallelism)
     df = with_part_id(df, num_parts, turn_bucket)
@@ -586,6 +581,7 @@ ASSEMBLE_SCHEMA = T.StructType(
 _ASSEMBLE_ARROW_SCHEMA = to_arrow_schema(ASSEMBLE_SCHEMA)
 
 
+@python_stage
 def _assemble_batches(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
     """Conversation-sorted (conv_id, turn_idx, extracted_text) batches →
     long spans, one output batch per input batch that completes a

@@ -31,7 +31,7 @@ def get_spark(
         # local mode: executors live in the driver JVM; the 1g default
         # throttles 32 concurrent parquet writers (effective at JVM launch
         # only — a no-op if a JVM already exists).
-        .config("spark.driver.memory", os.environ.get("OCR_SPARK_DRIVER_MEM", "16g"))
+        .config("spark.driver.memory", os.environ.get("OCR_SPARK_DRIVER_MEM") or driver_memory())
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
@@ -44,6 +44,15 @@ def get_spark(
         .config("spark.local.dir", _local_dir())
         .getOrCreate()
     )
+
+
+def driver_memory(total_bytes: int | None = None) -> str:
+    """Default driver heap: a quarter of physical memory, between 1g and
+    16g (the host runs more than this JVM, and in local mode the driver
+    JVM also hosts the executors)."""
+    if total_bytes is None:
+        total_bytes = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{max(1, min(16, total_bytes // 4 // 2**30))}g"
 
 
 def _local_dir() -> str:

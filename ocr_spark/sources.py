@@ -16,6 +16,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ocr_spark.worker import python_stage
+
 #: The reference's extension whitelist (scripts/ExtractX_OCR.py:72,514-527).
 PDF_EXTS = (".pdf",)
 IMAGE_EXTS = (".png", ".jpg", ".jpeg")
@@ -106,6 +108,7 @@ def warc_roundtrip(
 
     from ocr_spark.kernels import warc as W
 
+    @python_stage
     def assemble_and_parse(pdf: "pd.DataFrame") -> "pd.DataFrame":
         pdf = pdf.sort_values(id_col)
         # A WARC response body cannot represent NULL — skip NULL-text
@@ -194,6 +197,7 @@ def jsonl_roundtrip(
 
     import pandas as pd
 
+    @python_stage
     def write_and_parse(pdf: "pd.DataFrame") -> "pd.DataFrame":
         pdf = pdf.sort_values(id_col)
         # NULL payload fields ride through as JSON null (str() would
@@ -296,6 +300,7 @@ def _columnar_roundtrip(
     grouped-map stage that writes AND reads in-stage; the parallel axis
     is shards and text never leaves the stage except as result rows."""
 
+    @python_stage
     def write_and_read(pdf: "pd.DataFrame") -> "pd.DataFrame":
         import pyarrow as pa
 
@@ -435,6 +440,7 @@ def zip_roundtrip(
 
     import pandas as pd
 
+    @python_stage
     def write_and_parse(pdf: "pd.DataFrame") -> "pd.DataFrame":
         pdf = pdf.sort_values(id_col)
         buf = io.BytesIO()

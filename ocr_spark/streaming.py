@@ -30,6 +30,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ocr_spark.pipeline import DEFAULT_NUM_PARTS, DEFAULT_TURN_BUCKET, extract_stage
+from ocr_spark.worker import python_stage
 
 #: The driver contract's transcript schema (BASELINE.json input_hint);
 #: streams require an explicit schema (no inference at runtime).
@@ -370,6 +371,7 @@ _PROGRESS_STATE = T.StructType(
 )
 
 
+@python_stage
 def _progress_fn(key, pdfs, state):
     """Custom stateful kernel: running per-conversation turn totals that
     survive across micro-batches AND stream restarts (state store)."""

@@ -24,7 +24,6 @@ from ocr_spark.pipeline import (
     read_lineage,
     run_pipeline,
     run_pipeline_snapshots,
-    turn_checksum,
     turn_checksums,
     with_part_id,
 )
@@ -37,6 +36,11 @@ def corpus(tmp_path_factory):
     path = str(d / "transcripts.parquet")
     pdf.to_parquet(path, index=False)
     return path, pdf
+
+
+def turn_checksum(conv_id: str, turn_idx: int, text: str) -> int:
+    """One turn's checksum, through the same hasher as the pipeline."""
+    return int(turn_checksums(pd.Series([conv_id]), pd.Series([turn_idx]), pd.Series([text]))[0])
 
 
 def _sorted_pdf(df) -> pd.DataFrame:

@@ -401,6 +401,25 @@ def test_grounding_score_hand_values(spark):
     assert (r3.n_grounded, r3.grounded_e6) == (1, 1_000_000)
 
 
+def test_blank_is_one_definition_on_both_engines(spark):
+    import duckdb
+
+    texts = [
+        "", " ", "\u00a0", "\u3000", " \u00a0\u3000 ", "\u2009\u202f\u205f\u1680",
+        "\t", "\n", "\u200b", "x", " x\u3000", None,
+    ]
+    want = [True] * 6 + [False] * 5 + [None]
+    df = spark.createDataFrame([(i, t) for i, t in enumerate(texts)], "i int, text string")
+    got = [r.b for r in df.select("i", transcript.is_blank(F.col("text")).alias("b")).orderBy("i").collect()]
+    duck = duckdb.execute(
+        f"SELECT {transcript.blank_sql('text')}"
+        " FROM (SELECT unnest($1) AS text, unnest($2) AS i) ORDER BY i",
+        [texts, list(range(len(texts)))],
+    ).fetchall()
+    assert got == want
+    assert [b for (b,) in duck] == want
+
+
 def test_boilerplate_turns_flags_cross_conv_repeats(spark):
     rows = []
     for c in range(6):
