@@ -665,6 +665,13 @@ def conversation_tiers(turns: DataFrame) -> DataFrame:
     return _own_caches(out, [flagged])
 
 
+def _response_id(conv_id: str, turn_idx: str) -> Column:
+    """The (conv_id, turn_idx) pair as one join key. A struct, not a
+    joined string: concat_ws skips a NULL, so ("x#5", NULL) and ("x", 5)
+    would both read "x#5"."""
+    return F.struct(F.col(conv_id).alias("c"), F.col(turn_idx).alias("t"))
+
+
 def preference_pairs(qa: DataFrame) -> DataFrame:
     """DPO/RLHF preference-pair mining over mined QA pairs: when the
     SAME prompt has several candidate responses (re-asked questions,
@@ -684,7 +691,7 @@ def preference_pairs(qa: DataFrame) -> DataFrame:
 
     scored = (
         qa.withColumn("__pd", F.md5(F.col("prompt")))
-        .withColumn("__rid", F.concat_ws("#", "conv_id", "turn_idx"))
+        .withColumn("__rid", _response_id("conv_id", "turn_idx"))
     )
     q = quality_e4(
         scored.select("__rid", F.col("response").alias("text")),
@@ -1382,21 +1389,17 @@ def preference_length_bias(qa: DataFrame) -> DataFrame:
     one-row fold."""
     pairs = preference_pairs(qa)
     toks = qa.select(
-        F.concat_ws("#", "conv_id", "turn_idx").alias("__rid"),
+        _response_id("conv_id", "turn_idx").alias("__rid"),
         _tok_count(F.col("response")).alias("__nt"),
     )
     melted = pairs.select(
         F.md5("prompt").alias("__pd"),
-        F.concat_ws(
-            "#", "chosen_conv_id", "chosen_turn_idx"
-        ).alias("__rid"),
+        _response_id("chosen_conv_id", "chosen_turn_idx").alias("__rid"),
         F.lit(1).cast("bigint").alias("__sign"),
     ).unionByName(
         pairs.select(
             F.md5("prompt").alias("__pd"),
-            F.concat_ws(
-                "#", "rejected_conv_id", "rejected_turn_idx"
-            ).alias("__rid"),
+            _response_id("rejected_conv_id", "rejected_turn_idx").alias("__rid"),
             F.lit(-1).cast("bigint").alias("__sign"),
         )
     )

@@ -9,10 +9,11 @@ from pyspark.sql import SparkSession
 
 def get_spark(
     app: str = "ocr_spark",
-    master: str | None = None,
-    shuffle_partitions: int | None = None,
+    *,
+    master: str,
+    shuffle_partitions: int = 32,
 ) -> SparkSession:
-    """Build the session.
+    """Build the session on ``master`` (e.g. ``local[4]``).
 
     Defaults: AQE on (runtime re-plan / skew-join safety net on top of our
     explicit salting), Arrow transfer on with bounded batches (fat text
@@ -20,11 +21,6 @@ def get_spark(
     more than ~a few MB of payload at once), UTC session timezone
     (timestamp parity with the oracle regardless of host zone).
     """
-    if master is None:
-        cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-        master = f"local[{cpus}]"
-    if shuffle_partitions is None:
-        shuffle_partitions = int(os.environ.get("OCR_SPARK_SHUFFLE_PARTITIONS", "32"))
     return (
         SparkSession.builder.appName(app)
         .master(master)

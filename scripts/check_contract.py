@@ -3,11 +3,17 @@ __spark_entry__.queries() entry on Spark and its oracle_sql() in DuckDB at
 the given sf dir, compare row count + column names + values.
 
 Usage: python scripts/check_contract.py [--sf /root/testdata/sf0.01] [--only q1,q2]
+
+Prints the sha256 of the key order first, then one line per query; each
+``ok`` line ends with the sha256 of the query's canonical rows (``_canon``),
+so two checkouts can be compared value for value by diffing their output.
+A query without an oracle fails.
 """
 
 from __future__ import annotations
 
 import argparse
+import hashlib
 import os
 import sys
 import time
@@ -44,6 +50,10 @@ def _canon(df, float_dp=9):
     return rows
 
 
+def _sha(obj) -> str:
+    return hashlib.sha256(repr(obj).encode()).hexdigest()
+
+
 def main(argv=None) -> int:
     p = argparse.ArgumentParser()
     p.add_argument("--sf", default="/root/testdata/sf0.01")
@@ -68,6 +78,7 @@ def main(argv=None) -> int:
     qs = entrymod.queries()
     oracles = entrymod.oracle_sql()
     only = set(args.only.split(",")) if args.only else None
+    print(f"keys {len(qs)} order {_sha(list(qs))}")
     failures = []
     for name, fn in qs.items():
         if only and name not in only:
@@ -80,12 +91,12 @@ def main(argv=None) -> int:
             print(f"FAIL {name}: spark query raised")
             traceback.print_exc()
             continue
-        sql = oracles.get(name)
-        if sql is None:
-            print(f"ok   {name}: rows-only ({len(got)} rows) [{time.monotonic()-t0:.1f}s]")
+        if name not in oracles:
+            failures.append(name)
+            print(f"FAIL {name}: no oracle")
             continue
         try:
-            want = con.sql(sql).df()
+            want = con.sql(oracles[name]).df()
         except Exception:
             failures.append(name)
             print(f"FAIL {name}: oracle SQL raised")
@@ -110,14 +121,19 @@ def main(argv=None) -> int:
                 print("  spark:", g[i])
                 print("  duck :", w[i])
             continue
-        print(f"ok   {name}: {len(got)} rows match [{time.monotonic()-t0:.1f}s]")
+        print(
+            f"ok   {name}: {len(got)} rows match [{time.monotonic()-t0:.1f}s]"
+            f" sha256 {_sha(g)}"
+        )
 
     # entry() smoke
     if only is None:
         try:
-            res = entrymod.entry(spark)
-            n = res.count()
-            print(f"ok   entry(): {n} rows, schema {[c for c in res.columns]}")
+            res = entrymod.entry(spark).toPandas()
+            print(
+                f"ok   entry(): {len(res)} rows, schema {list(res.columns)}"
+                f" sha256 {_sha(_canon(res))}"
+            )
         except Exception:
             failures.append("entry")
             traceback.print_exc()

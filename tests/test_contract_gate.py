@@ -3,7 +3,7 @@ its DuckDB oracle re-proven at sf0.001 on EVERY pytest run, so queries
 rotated out of the driver's 50-entry correctness window keep fresh green
 evidence each round. Runs scripts/check_contract.py as a subprocess —
 its own SparkSession (one thread per owned CPU) must not stop the shared test session.
-~95 s; the single slowest test in the gate, by design the widest."""
+184-216 s on a 4-vCPU host; the single slowest test in the gate, by design the widest."""
 
 from __future__ import annotations
 
@@ -32,3 +32,12 @@ def test_full_contract_surface_sf0001():
     tail = "\n".join(proc.stdout.splitlines()[-40:])
     assert proc.returncode == 0, f"contract replay failed:\n{tail}\n{proc.stderr[-2000:]}"
     assert "ALL OK" in proc.stdout, tail
+
+
+def test_every_query_has_an_oracle_in_the_same_key_order():
+    # import only, no Spark: the records make the oracle part of the query
+    import __spark_entry__ as entrymod
+
+    keys = list(entrymod.queries())
+    assert keys
+    assert keys == list(entrymod.oracle_sql())

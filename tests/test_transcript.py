@@ -281,6 +281,24 @@ def test_preference_pairs_argmax_argmin_and_tie_drop(spark):
     assert r.margin_e4 > 0
 
 
+def test_preference_responses_keyed_on_the_pair_not_a_joined_string(spark):
+    # ("x#5", NULL) and ("x", 5) are two responses; a "#"-joined key
+    # (concat_ws skips the NULL) reads both as "x#5" and cross-joins their
+    # quality scores
+    qa = spark.createDataFrame(
+        [
+            ("x#5", None, "p", "the a of and to in is it for on with as at by"),
+            ("x", 5, "p", "zzz@@@"),
+        ],
+        "conv_id string, turn_idx int, prompt string, response string",
+    )
+    (r,) = transcript.preference_pairs(qa).collect()
+    assert (r.chosen_conv_id, r.chosen_turn_idx) == ("x#5", None)
+    assert (r.rejected_conv_id, r.rejected_turn_idx) == ("x", 5)
+    (b,) = transcript.preference_length_bias(qa).collect()
+    assert (b.n_pairs, b.chosen_longer, b.sum_delta_tokens) == (1, 1, 14 - 1)
+
+
 def test_dedup_keep_best_one_keeper_per_cluster(spark):
     from ocr_spark.operators import dedup
 
