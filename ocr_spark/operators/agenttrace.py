@@ -30,11 +30,8 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
-
-def _conv_window() -> Window:
-    return Window.partitionBy("conv_id").orderBy("turn_idx")
+from ocr_spark.operators.runs import changed, conv_window, run_ids
 
 
 def tool_stats(turns: DataFrame) -> DataFrame:
@@ -50,7 +47,7 @@ def tool_stats(turns: DataFrame) -> DataFrame:
     call but no gap (``n_gaps`` counts only turns with a successor).
     One conv_id exchange for the lead(); the final groupBy keys on the
     tool name — a handful of keys, map-side combined."""
-    w = _conv_window()
+    w = conv_window()
     gap = F.lead("ts_s").over(w) - F.col("ts_s")
     g = turns.select(
         "conv_id", "tool", gap.alias("__gap")
@@ -77,7 +74,7 @@ def tool_bigrams(turns: DataFrame) -> DataFrame:
     turns in between don't break a transition); a conversation's first
     tool call has no predecessor and is excluded.  One conv_id
     exchange; the count keys on tool-name pairs (tiny domain)."""
-    w = _conv_window()
+    w = conv_window()
     t = turns.filter(F.col("tool").isNotNull()).select(
         "conv_id",
         "turn_idx",
@@ -106,7 +103,7 @@ def turn_latency(
 
     One conv_id exchange: the lag() and the groupBy share the same
     partitioning, so Catalyst plans a single shuffle."""
-    w = _conv_window()
+    w = conv_window()
     gap = F.col("ts_s") - F.lag("ts_s").over(w)
     g = turns.select("conv_id", "ts_s", gap.alias("__gap"))
     return (
@@ -129,22 +126,19 @@ def tool_loops(turns: DataFrame, min_run: int = 2) -> DataFrame:
     agent re-invoking a failing tool.  Trajectories containing long
     runs are prime filter candidates for SFT corpora.
 
-    Gaps-and-islands over the tool-bearing subsequence: with rows
-    numbered by turn order overall (``rn``) and within each tool
-    (``rt``), ``rn − rt`` is constant exactly along a run of one tool,
-    so grouping on (conv_id, tool, rn − rt) yields the maximal runs.
-    "Consecutive" means adjacent in the tool-call SEQUENCE — plain
-    text turns between two calls of the same tool don't break a run.
-    Both row_numbers and the groupBy ride one conv_id exchange."""
+    Runs are numbered by :func:`runs.run_ids` over the tool-bearing
+    subsequence, so "consecutive" means adjacent in the tool-call
+    SEQUENCE — plain text turns between two calls of the same tool
+    don't break a run. One conv_id exchange and one window sort."""
+    w = conv_window()
     t = turns.filter(F.col("tool").isNotNull())
-    rn = F.row_number().over(_conv_window())
-    rt = F.row_number().over(
-        Window.partitionBy("conv_id", "tool").orderBy("turn_idx")
-    )
     isl = t.select(
-        "conv_id", "turn_idx", "tool", (rn - rt).alias("__isl")
+        "conv_id",
+        "turn_idx",
+        "tool",
+        run_ids(w, changed("tool", w)).alias("__run"),
     )
-    runs = isl.groupBy("conv_id", "tool", "__isl").agg(
+    runs = isl.groupBy("conv_id", "tool", "__run").agg(
         F.min("turn_idx").alias("start_turn"),
         F.max("turn_idx").alias("end_turn"),
         F.count("*").alias("run_len"),
@@ -209,18 +203,16 @@ def episodes(turns: DataFrame, gap_s: int = EPISODE_GAP_S) -> DataFrame:
     not one sample).
 
     All-integer arithmetic on epoch-second ``ts_s`` (no timestamp
-    casts — the event_funnel tz lesson).  The lag, the running episode
-    counter, and the per-episode groupBy all ride ONE conv_id
-    exchange."""
-    w = _conv_window()
+    casts — the event_funnel tz lesson).  Episodes are numbered by
+    :func:`runs.run_ids`; the lag, the run numbering, and the
+    per-episode groupBy all ride ONE conv_id exchange."""
+    w = conv_window()
     gap = F.col("ts_s") - F.lag("ts_s").over(w)
-    brk = F.when(gap > gap_s, 1).otherwise(0)
-    run = w.rowsBetween(Window.unboundedPreceding, 0)
     marked = turns.select(
         "conv_id",
         "turn_idx",
         "ts_s",
-        F.sum(brk).over(run).cast("int").alias("episode_idx"),
+        run_ids(w, gap > gap_s).cast("int").alias("episode_idx"),
     )
     return (
         marked.groupBy("conv_id", "episode_idx")

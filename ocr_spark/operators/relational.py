@@ -13,6 +13,8 @@ from functools import reduce
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ocr_spark.operators.runs import ordered_list, run_ids
+
 
 def range_filter(df: DataFrame, col: str, start: int, end: int | None) -> DataFrame:
     """1-based inclusive range selection (reference page_range_filter,
@@ -665,8 +667,8 @@ def sessionize(events: DataFrame, gap_sec: int = SESSION_GAP_SEC) -> DataFrame:
     """Inactivity-gap sessionization — the third classic event-stream
     shape next to :func:`event_funnel` / :func:`event_retention`: a
     user's events belong to one session until a silence longer than
-    ``gap_sec``; each new gap starts the next session (the standard
-    gaps-and-islands construction: lag → boundary flag → running sum).
+    ``gap_sec``; each new gap starts the next session, numbered 1.. by
+    :func:`runs.run_ids`.
 
     Timestamps are compared as exact epoch MICROSECONDS (the
     TIMESTAMP_NTZ → ltz hop under the session's pinned UTC zone, ≡
@@ -675,13 +677,12 @@ def sessionize(events: DataFrame, gap_sec: int = SESSION_GAP_SEC) -> DataFrame:
     per-user event order is (ts_us, event_id), total because event_id
     is unique.
 
-    Scale shape: ONE exchange on user_id feeds both windows (same
-    partition spec → a single Window sort) AND the final aggregate —
-    hash partitioning on user_id satisfies the (user_id, session_seq)
-    clustering requirement, so the groupBy adds no exchange. Per-user
-    data is bounded (a user's history fits a partition easily at any
-    corpus size); a pathological robot user is an AQE-skew concern for
-    the sort, not a correctness one.
+    Scale shape: ONE exchange on user_id feeds the window (a single
+    Window sort) AND the final aggregate — hash partitioning on user_id
+    satisfies the (user_id, session_seq) clustering requirement, so the
+    groupBy adds no exchange. Per-user data is bounded (a user's history
+    fits a partition easily at any corpus size); a pathological robot
+    user is an AQE-skew concern for the sort, not a correctness one.
     """
     from pyspark.sql.window import Window
 
@@ -693,25 +694,15 @@ def sessionize(events: DataFrame, gap_sec: int = SESSION_GAP_SEC) -> DataFrame:
     )
     w = Window.partitionBy("user_id").orderBy("ts_us", "event_id")
     gap_us = int(gap_sec) * 1_000_000
-    ev = ev.select(
-        "*",
-        F.when(
-            F.lag("ts_us").over(w).isNull()
-            | (F.col("ts_us") - F.lag("ts_us").over(w) > F.lit(gap_us)),
-            F.lit(1),
-        )
-        .otherwise(F.lit(0))
-        .alias("is_new"),
-    )
+    prev = F.lag("ts_us").over(w)
+    # a NULL predecessor opens a session too, not only the first event
+    new = prev.isNull() | (F.col("ts_us") - prev > F.lit(gap_us))
     ev = ev.select(
         "user_id",
         "event_id",
         "event_type",
         "ts_us",
-        F.sum("is_new")
-        .over(w.rowsBetween(Window.unboundedPreceding, Window.currentRow))
-        .cast("long")
-        .alias("session_seq"),
+        (run_ids(w, new) + 1).alias("session_seq"),
     )
     return ev.groupBy("user_id", "session_seq").agg(
         F.count(F.lit(1)).cast("long").alias("n_events"),
@@ -808,13 +799,7 @@ def table_to_markdown(
         F.count(F.lit(1)).cast("long").alias("n_rows"),
         F.concat(
             F.lit(head + "\n" + sep + "\n"),
-            F.array_join(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("__ord", "__line"))),
-                    lambda st: st["__line"],
-                ),
-                "\n",
-            ),
+            F.array_join(ordered_list("__ord", "__line"), "\n"),
         ).alias("markdown"),
     )
 

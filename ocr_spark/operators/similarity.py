@@ -29,6 +29,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.pandas.functions import pandas_udf
 from pyspark.sql.window import Window
 
+from ocr_spark.operators.runs import ordered_list
 from ocr_spark.worker import python_stage
 
 
@@ -663,10 +664,7 @@ def embedding_outliers(
         .agg(F.sum("__x").alias("__s"))
     )
     cent = sums.groupBy(label_col).agg(
-        F.transform(
-            F.array_sort(F.collect_list(F.struct("__d", "__s"))),
-            lambda t: t["__s"],
-        ).alias("__c")
+        ordered_list("__d", "__s").alias("__c")
     )
     dec = lambda c: c.cast("decimal(38,0)")  # noqa: E731
     zero = F.lit(0).cast("decimal(38,0)")

@@ -11,6 +11,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ocr_spark.operators.runs import changed, ordered_list, run_ids
 from ocr_spark.worker import python_stage
 
 #: English function words used by the n-gram/stopword heuristics. Fixed —
@@ -1192,16 +1193,11 @@ def line_dedup(
         .select("lh", F.lit(True).alias("is_bad"))
     )
     marked = lines.join(bad, "lh", "left")
-    survivor = F.when(
-        F.col("is_bad").isNull(), F.struct("line_idx", "line")
-    )
+    survivor = F.when(F.col("is_bad").isNull(), F.col("line"))
     result = marked.groupBy(id_col).agg(
-        F.concat_ws(
-            "\n",
-            F.transform(
-                F.array_sort(F.collect_list(survivor)), lambda x: x["line"]
-            ),
-        ).alias("clean_text"),
+        F.concat_ws("\n", ordered_list("line_idx", survivor)).alias(
+            "clean_text"
+        ),
         F.count(F.lit(1)).alias("n_lines"),
         F.count("is_bad").alias("n_dropped"),
     )
@@ -1811,16 +1807,15 @@ def script_segments(
     not just the per-doc majority that :func:`script_detect` reports.
     Each input line gets its dominant script (same explicit codepoint
     ranges, ``unknown`` when none), then consecutive same-script lines
-    merge into segments via gaps-and-islands (row_number minus
-    per-script row_number), renumbered 0.. by start line.
+    merge into segments numbered 0.. by :func:`runs.run_ids`.
 
     Scale shape: the script label is a map-side JVM regexp argmax; the
-    two ranking windows, the island aggregation, and the segment
-    renumber ALL partition on the document id — one exchange total,
-    and only (id, idx, 16-char label) rows cross it."""
+    run window and the segment aggregation both partition on the
+    document id — one exchange and one window sort total, and only
+    (id, idx, 16-char label) rows cross it."""
     from pyspark.sql.window import Window
 
-    w_all = Window.partitionBy(id_col).orderBy(idx_col)
+    w = Window.partitionBy(id_col).orderBy(idx_col)
     _, total, winner = _script_winner(F.col(col))
     label = F.when(total == 0, F.lit("unknown")).otherwise(
         F.substring(winner, 15, 16)
@@ -1830,19 +1825,19 @@ def script_segments(
         F.col(idx_col).cast("int").alias(idx_col),
         label.alias("script"),
     )
-    w_scr = Window.partitionBy(id_col, "script").orderBy(idx_col)
     isl = lab.withColumn(
-        "__grp", F.row_number().over(w_all) - F.row_number().over(w_scr)
+        "seg_idx", run_ids(w, changed("script", w)).cast("int")
     )
-    seg = isl.groupBy(id_col, "script", "__grp").agg(
+    # script stays in the group key: grouping on the run id alone with
+    # min(script) plans a sort aggregate, a second sort
+    seg = isl.groupBy(id_col, "script", "seg_idx").agg(
         F.min(idx_col).cast("int").alias("start_line"),
         F.max(idx_col).cast("int").alias("end_line"),
         F.count("*").cast("long").alias("n_lines"),
     )
-    w_seg = Window.partitionBy(id_col).orderBy("start_line")
     return seg.select(
         id_col,
-        (F.row_number().over(w_seg) - 1).cast("int").alias("seg_idx"),
+        "seg_idx",
         "script",
         "start_line",
         "end_line",
@@ -2992,17 +2987,7 @@ def strip_page_furniture(
             "n_furniture_lines"
         ),
         F.array_join(
-            F.transform(
-                F.filter(
-                    F.array_sort(
-                        F.collect_list(
-                            F.struct("line_idx", "__furn", "line")
-                        )
-                    ),
-                    lambda st: ~st["__furn"],
-                ),
-                lambda st: st["line"],
-            ),
+            ordered_list("line_idx", F.when(~F.col("__furn"), F.col("line"))),
             "\n",
         ).alias("body_text"),
     )
@@ -3130,19 +3115,11 @@ def sentence_chunk(
         F.col(id_col),
         F.posexplode(_tokens(col)).alias("idx", "tok"),
     )
-    w = (
-        Window.partitionBy(id_col)
-        .orderBy("idx")
-        .rowsBetween(Window.unboundedPreceding, -1)
+    w = Window.partitionBy(id_col).orderBy("idx")
+    is_end = F.col("tok").rlike("[.!?]$") | (
+        (F.col("idx") + 1) % int(max_sent) == 0
     )
-    is_end = F.when(
-        F.col("tok").rlike("[.!?]$")
-        | ((F.col("idx") + 1) % int(max_sent) == 0),
-        1,
-    ).otherwise(0)
-    s = tok.withColumn(
-        "sent_id", F.coalesce(F.sum(is_end).over(w), F.lit(0)).cast("long")
-    )
+    s = tok.withColumn("sent_id", run_ids(w, F.lag(is_end).over(w)))
     st = s.withColumn(
         "sent_start",
         F.min("idx").over(Window.partitionBy(id_col, "sent_id")),
@@ -3150,13 +3127,7 @@ def sentence_chunk(
     return st.groupBy(id_col, "chunk_id").agg(
         F.count(F.lit(1)).cast("long").alias("n_tokens"),
         F.countDistinct("sent_id").cast("long").alias("n_sentences"),
-        F.array_join(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("idx", "tok"))),
-                lambda x: x["tok"],
-            ),
-            " ",
-        ).alias("chunk_text"),
+        F.array_join(ordered_list("idx", "tok"), " ").alias("chunk_text"),
     )
 
 
@@ -3338,18 +3309,17 @@ def main_content(
     Scale shape: :func:`boilerplate_classify` costs one exchange on the
     document id (its neighbour window); this aggregation groups on the
     SAME key, so Catalyst reuses the partitioning — no second exchange.
-    The ordered reassembly happens inside the aggregate (array_sort
-    over (idx, kept, text) structs), never via a global sort."""
+    The ordered reassembly happens inside the aggregate
+    (:func:`runs.ordered_list`), never via a global sort."""
     classed = boilerplate_classify(
         df, para_col, id_col, idx_col, keep_text=True
     )
     return classed.groupBy(id_col).agg(
         F.count("*").cast("long").alias("n_paras"),
         F.sum(F.col("kept").cast("long")).alias("n_kept"),
-        F.expr(
-            "array_join(transform(filter(array_sort("
-            f"collect_list(struct({idx_col}, kept, {para_col}))),"
-            f" s -> s.kept), s -> s.{para_col}), '\\n\\n')"
+        F.array_join(
+            ordered_list(idx_col, F.when(F.col("kept"), F.col(para_col))),
+            "\n\n",
         ).alias("main_text"),
     )
 
@@ -4224,27 +4194,11 @@ def span_corruption(
         .otherwise(F.lit(None).cast("string"))
     )
 
-    def _ordered_join(valcol):
-        return F.array_join(
-            F.transform(
-                F.array_sort(
-                    F.collect_list(
-                        F.when(
-                            valcol.isNotNull(),
-                            F.struct(
-                                F.col("pos").alias("p"), valcol.alias("v")
-                            ),
-                        )
-                    )
-                ),
-                lambda s: s["v"],
-            ),
-            " ",
-        )
-
     return s3.groupBy(id_col).agg(
-        _ordered_join(ival).alias("input_text"),
-        F.nullif(_ordered_join(tval), F.lit("")).alias("target_text"),
+        F.array_join(ordered_list("pos", ival), " ").alias("input_text"),
+        F.nullif(
+            F.array_join(ordered_list("pos", tval), " "), F.lit("")
+        ).alias("target_text"),
         F.max("k").cast("long").alias("n_spans"),
         F.sum(F.col("m").cast("int")).cast("long").alias("n_masked"),
     )

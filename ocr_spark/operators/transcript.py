@@ -44,6 +44,13 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ocr_spark.operators.runs import (
+    changed,
+    conv_window,
+    ordered_list,
+    run_ids,
+)
+
 #: A text is blank when nothing is left after deleting the Unicode space
 #: separators (category Zs). DuckDB's ``trim`` strips all of them and
 #: Spark's only U+0020, so neither engine's ``trim`` decides blankness:
@@ -61,10 +68,6 @@ def blank_sql(expr: str) -> str:
     return f"(translate({expr}, '{BLANK_CHARS}', '') = '')"
 
 
-def _conv_window() -> Window:
-    return Window.partitionBy("conv_id").orderBy("turn_idx")
-
-
 def qa_pairs(
     turns: DataFrame,
     user_role: str = "user",
@@ -79,7 +82,7 @@ def qa_pairs(
     over the unbounded-preceding frame is a running value, not a
     per-row rescan, so long conversations cost O(turns)."""
     w = (
-        _conv_window()
+        conv_window()
         .rowsBetween(Window.unboundedPreceding, -1)
     )
     prompt = F.last(
@@ -106,22 +109,16 @@ def clean_turns(turns: DataFrame) -> DataFrame:
     Keep-first semantics: the FIRST turn of a repeat run survives with
     its original turn_idx.  Both windows share the (conv_id, turn_idx)
     sort, so Catalyst plans a single exchange."""
-    w = _conv_window()
+    w = conv_window()
     nonblank = turns.filter(~is_blank(F.col("text")))
     flagged = nonblank.select(
         "conv_id",
         "turn_idx",
         "role",
         "text",
-        F.lag("role").over(w).alias("__pr"),
-        F.lag("text").over(w).alias("__pt"),
+        (changed("role", w) | changed("text", w)).alias("__new"),
     )
-    kept = flagged.filter(
-        ~(
-            F.col("role").eqNullSafe(F.col("__pr"))
-            & F.col("text").eqNullSafe(F.col("__pt"))
-        )
-    )
+    kept = flagged.filter(F.col("__new"))
     return kept.select(
         "conv_id",
         (F.row_number().over(w) - 1).alias("new_turn_idx"),
@@ -140,7 +137,7 @@ def validate_roles(
     conversation opens with a user turn.  ``valid`` is the ingestion
     gate.  One exchange on conv_id; the groupBy rides the window's
     partitioning."""
-    w = _conv_window()
+    w = conv_window()
     viol = (F.col("role") == F.lag("role").over(w)).cast("int")
     per_turn = turns.select(
         "conv_id",
@@ -184,7 +181,7 @@ def loss_mask(
     Emits [start_tok, end_tok) offsets of every non-empty assistant
     turn in that stream.  Running sum over the conv window — integers
     end to end, so the offsets are exact and engine-portable."""
-    w = _conv_window().rowsBetween(Window.unboundedPreceding, -1)
+    w = conv_window().rowsBetween(Window.unboundedPreceding, -1)
     tok = _tok_count(F.col("text"))
     spans = turns.select(
         "conv_id",
@@ -276,15 +273,11 @@ def _digest_array(turns: DataFrame) -> DataFrame:
     return (
         turns.select("conv_id", "turn_idx", _turn_digest().alias("__d"))
         .groupBy("conv_id")
-        .agg(
-            F.array_sort(F.collect_list(F.struct("turn_idx", "__d"))).alias(
-                "__a"
-            )
-        )
+        .agg(ordered_list("turn_idx", "__d").alias("__digs"))
         .select(
             "conv_id",
-            F.expr("transform(__a, s -> s.__d)").alias("__digs"),
-            F.size("__a").cast("int").alias("n_turns"),
+            "__digs",
+            F.size("__digs").cast("int").alias("n_turns"),
         )
     )
 
@@ -449,21 +442,13 @@ def fork_prefixes(
     conversation (bounded, unlike full-prefix explosion), the
     (plen, prefix_digest) count is a partial-aggregated exchange of
     integers, and the flag returns by digest hash join."""
-    dig = turns.select(
-        "conv_id", "turn_idx", _turn_digest().alias("__d")
-    )
-    arr = dig.groupBy("conv_id").agg(
-        F.array_sort(F.collect_list(F.struct("turn_idx", "__d"))).alias(
-            "__a"
-        )
-    )
+    arr = _digest_array(turns)
     pre = arr.select(
         "conv_id",
         F.posexplode(
             F.expr(
-                f"transform(sequence(1, least({max_depth}, size(__a))),"
-                " i -> md5(concat_ws('',"
-                " transform(slice(__a, 1, i), s -> s.__d))))"
+                f"transform(sequence(1, least({max_depth}, n_turns)),"
+                " i -> md5(concat_ws('', slice(__digs, 1, i))))"
             )
         ).alias("__p0", "pdig"),
     ).select(
@@ -503,10 +488,10 @@ def render_chat(turns: DataFrame) -> DataFrame:
 
     Scale shape: one exchange on conv_id; the per-turn parts are
     assembled map-side and the ordered concat happens inside the
-    aggregate (array_sort over (turn_idx, part) structs — no window,
-    no second shuffle).  NULL role/text render as empty (|| would
-    null-poison the whole conversation on the SQL side; coalesce keeps
-    both engines identical)."""
+    aggregate (:func:`runs.ordered_list` — no window, no second
+    shuffle).  NULL role/text render as empty (|| would null-poison
+    the whole conversation on the SQL side; coalesce keeps both
+    engines identical)."""
     part = F.concat(
         F.lit("<|im_start|>"),
         F.coalesce(F.col("role"), F.lit("")),
@@ -519,11 +504,9 @@ def render_chat(turns: DataFrame) -> DataFrame:
         .groupBy("conv_id")
         .agg(
             F.count("*").cast("long").alias("n_turns"),
-            F.expr(
-                "array_join(transform("
-                " array_sort(collect_list(struct(turn_idx, __part))),"
-                " s -> s.__part), '')"
-            ).alias("rendered"),
+            F.array_join(ordered_list("turn_idx", "__part"), "").alias(
+                "rendered"
+            ),
         )
     )
     return g.select(
@@ -1323,31 +1306,20 @@ def merge_role_runs(turns: DataFrame) -> DataFrame:
     from :func:`clean_turns`, which collapses only VERBATIM retry
     repeats — this merges any same-role run regardless of content.
 
-    Run detection is gaps-and-islands via a running change counter
-    (first turn of a conversation always starts a run, so a NULL role
-    in row one doesn't alias with a NULL lag); the lag, the running
-    sum, and the per-run groupBy all ride ONE conv_id exchange, and
-    the ordered concat happens inside the aggregate (no second
-    window)."""
-    w = _conv_window()
-    first = F.row_number().over(w) == 1
-    chg = F.when(
-        first | ~F.lag("role").over(w).eqNullSafe(F.col("role")), 1
-    ).otherwise(0)
-    run = F.sum(chg).over(w.rowsBetween(Window.unboundedPreceding, 0))
+    Runs are numbered by :func:`runs.run_ids` on a NULL-safe role
+    change; the run numbering and the per-run groupBy ride ONE conv_id
+    exchange, and the ordered concat happens inside the aggregate (no
+    second window)."""
+    w = conv_window()
     r = turns.select(
-        "conv_id", "turn_idx", "role", "text", run.alias("__run")
+        "conv_id",
+        "turn_idx",
+        "role",
+        "text",
+        run_ids(w, changed("role", w)).alias("__run"),
     )
     merged_text = F.array_join(
-        F.transform(
-            F.array_sort(
-                F.collect_list(
-                    F.struct("turn_idx", F.coalesce("text", F.lit("")).alias("t"))
-                )
-            ),
-            lambda s: s.t,
-        ),
-        "\n",
+        ordered_list("turn_idx", F.coalesce("text", F.lit(""))), "\n"
     )
     return (
         r.groupBy("conv_id", "__run")
@@ -1360,7 +1332,7 @@ def merge_role_runs(turns: DataFrame) -> DataFrame:
         )
         .select(
             "conv_id",
-            (F.col("__run") - 1).cast("int").alias("new_turn_idx"),
+            F.col("__run").cast("int").alias("new_turn_idx"),
             "role",
             "text",
             "start_turn",
@@ -1634,7 +1606,7 @@ def context_cost(turns: DataFrame) -> DataFrame:
     All-integer whitespace tokens (swap in bpe_token_count_expr for
     subword billing); the prefix running sum and the per-conversation
     aggregate ride ONE conv_id exchange."""
-    w = _conv_window().rowsBetween(Window.unboundedPreceding, -1)
+    w = conv_window().rowsBetween(Window.unboundedPreceding, -1)
     tok = _tok_count(F.col("text"))
     per = turns.select(
         "conv_id",

@@ -35,6 +35,11 @@ def _exchange_blocks(plan: str) -> list[str]:
     ]
 
 
+def _sorts(plan: str) -> int:
+    """Sort nodes in a formatted plan's tree (SortAggregate excluded)."""
+    return len(re.findall(r"\bSort \(\d+\)", plan.split("\n\n")[0]))
+
+
 @pytest.fixture(scope="module")
 def lineitem(spark):
     return spark.read.parquet(f"{SF}/lineitem.parquet")
@@ -1342,6 +1347,16 @@ def test_agent_trace_ops_one_conv_exchange(spark):
         assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
 
 
+def test_tool_loops_one_window_sort(spark):
+    from ocr_spark.operators import agenttrace
+
+    # runs.run_ids numbers the runs over the conv window alone: no
+    # second rank window partitioned by (conv_id, tool), so one sort
+    plan = _plan(agenttrace.tool_loops(_agent_turns_frame(spark)))
+    assert _sorts(plan) == 1
+    assert len(_exchange_blocks(plan)) == 1
+
+
 def test_code_blocks_zero_exchanges(spark):
     from ocr_spark.operators import agenttrace
 
@@ -1541,12 +1556,14 @@ def test_script_segments_one_doc_exchange(spark):
         ["doc_id", "line_idx", "line_text"],
     )
     plan = _plan(textops.script_segments(lines))
-    # label is a map-side regexp argmax; both rank windows, the island
-    # agg, and the renumber all partition on doc_id -> one exchange,
-    # and raw line text never crosses it
+    # label is a map-side regexp argmax; the run window and the segment
+    # agg partition on doc_id -> one exchange, and raw line text never
+    # crosses it; the run id is the segment index, so the one window
+    # sort is the only sort
     blocks = _exchange_blocks(plan)
     assert len(blocks) == 1
     assert "line_text" not in blocks[0]
+    assert _sorts(plan) == 1
 
 
 def test_hist_quantiles_sketch_sized_exchanges(spark):
