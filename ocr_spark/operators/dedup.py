@@ -562,8 +562,9 @@ def duplicate_clusters(
     edges — see verified_dup_pairs; singletons keep their own id).
 
     The closure is :func:`graph.connected_components`: min-label
-    propagation run to its fixpoint, one distributed join + keyed
-    min-aggregate per round, so any chain length converges.
+    propagation, one distributed join + keyed min-aggregate per round,
+    until the edges left between labels fit under its driver bound and
+    union-find ends it, so any chain length converges.
     Deterministic under any partitioning — labels are mins, never
     first-seen."""
     from ocr_spark.operators.graph import connected_components

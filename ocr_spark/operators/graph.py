@@ -6,8 +6,10 @@ web text; see Page et al. 1999, and Common Crawl's host-level ranks).
 PageRank and HITS are integer micro-unit arithmetic with a FIXED
 iteration count, so the DuckDB oracle replays the exact values by
 textually unrolling the same iterations (the k-means / IVF precedent in
-operators/similarity.py). :func:`connected_components` instead runs to
-its fixpoint; its oracles are recursive CTEs.
+operators/similarity.py). :func:`connected_components` instead propagates
+labels until the edges left between labels fit under
+:data:`CC_DRIVER_EDGES`, then ends with union-find on the driver; its
+oracles are recursive CTEs.
 
 Reference parity note: the reference repo (a single-document OCR
 script) has no corpus-level graph pass; this is builder-brief breadth
@@ -16,8 +18,14 @@ for the 100 TB training-data pipeline surface.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Observation
+import logging
+
+import pandas as pd
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructField, StructType
+
+log = logging.getLogger("ocr_spark")
 
 #: PageRank damping factor as an exact rational: 0.85 = DAMP_NUM/DAMP_DEN.
 DAMP_NUM = 17
@@ -224,53 +232,128 @@ def oracle_hits_sql(edges_cte: str, iters: int = HITS_ITERS) -> str:
     return "".join(parts)
 
 
+#: Live-edge bound for finishing :func:`connected_components` on the
+#: driver: once at most this many distinct edges still join two
+#: different labels, one ``limit(CC_DRIVER_EDGES + 1)`` collect brings
+#: them to the driver and union-find ends the closure. The driver then
+#: holds at most CC_DRIVER_EDGES + 1 rows of two ids and a map of at
+#: most 2 × CC_DRIVER_EDGES labels: under 10 MB for long ids, more for
+#: long string ids. 0 runs every round distributed, to the fixpoint.
+CC_DRIVER_EDGES = 20_000
+
+
 def connected_components(pairs: DataFrame, ids: DataFrame) -> DataFrame:
     """Connected components of the undirected graph on ``ids`` (one
     column ``id``, every pair endpoint among them) with edges ``pairs``
-    (columns ``src``, ``dst``): one ``(id, label)`` row per distinct id,
-    ``label`` the MIN id of its component, so isolated ids keep their
-    own.  Any orderable id type works (long, string); the result is
-    deterministic under any partitioning, because labels are mins.
+    (columns ``src``, ``dst``; a pair with a NULL endpoint is no edge):
+    one ``(id, label)`` row per distinct id, ``label`` the MIN id of its
+    component, so isolated ids keep their own.  Any orderable id type
+    whose Python values sort as Spark sorts them works (long, string);
+    the result is deterministic under any partitioning, because labels
+    are mins.
 
-    Min-label propagation to a fixpoint.  One round is one action: the
-    labels join the symmetric edges on src, union with the current
-    labels, and one keyed aggregate takes ``min(label)`` while carrying
-    each node's old label as ``max(old)``; an ``Observation`` counts
-    the changed labels on the eager ``localCheckpoint`` that
-    materializes the round and cuts its plan.  The only exit is a round
-    that changes nothing, so a partial closure is never returned and
-    the loop ends within (largest component diameter + 1) rounds.
+    One loop of min-label propagation.  At the head of every round,
+    before round 1 too, the *live edges* are the edges relabeled to
+    ``(label[src], label[dst])``, kept where the two labels differ, as
+    distinct unordered pairs; one bounded action collects at most
+    :data:`CC_DRIVER_EDGES` + 1 of them.
+    - If they fit under the bound, the driver finishes: union-find over
+      those label pairs, with each component's minimum as its root, and
+      each label maps to its root through a broadcast join of a small
+      frame of the id column's own type.  Labels no live edge touches
+      keep their value.
+    - Otherwise one round runs: the labels join the symmetric edges on
+      src, union with the current labels, and one keyed aggregate takes
+      ``min(label)``; an eager ``localCheckpoint`` materializes the
+      round and cuts its plan.
+    Bound 0 exits exactly at the fixpoint (no live edge left), so a
+    partial closure is never returned, and the loop ends within
+    (largest component diameter) rounds.  The edge frame is the live
+    edges before round 1, local-checkpointed lazily so the first
+    bounded collect fills it.  Logs ``rounds=R driver_edges=E`` once per
+    call to the ``ocr_spark`` logger.
 
     Trade-off: ``localCheckpoint`` blocks are not recomputed after an
-    executor is lost (persisted labels would be); the job fails
+    executor is lost (persisted frames would be); the job fails
     instead."""
-    edges = (
-        pairs.select("src", "dst")
-        .unionByName(
-            pairs.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-        )
-        .persist()
+    # its shuffle stages run here; the first bounded collect fills it
+    edges = _live_edges(pairs.select("src", "dst").dropna()).localCheckpoint(
+        eager=False
+    )
+    both = edges.unionByName(
+        edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     )
     labels = ids.select("id", F.col("id").alias("label")).distinct()
-    try:
-        while True:
-            prop = edges.join(labels, edges.src == labels.id).select(
-                F.col("dst").alias("id"), "label"
-            )
-            changed = Observation()
-            labels = (
-                labels.select("id", "label", F.col("label").alias("old"))
-                .unionByName(prop, allowMissingColumns=True)
-                .groupBy("id")
-                .agg(F.min("label").alias("label"), F.max("old").alias("old"))
-                .observe(
-                    changed,
-                    F.count_if(F.col("label") != F.col("old")).alias("n"),
-                )
-                .localCheckpoint()
-                .select("id", "label")
-            )
-            if changed.get["n"] == 0:
-                return labels
-    finally:
-        edges.unpersist()
+    rounds = 0
+    while True:
+        # one partition, so the limit reads it in one job (a take over
+        # the shuffle's partitions runs one job per growing batch)
+        live = _live_edges(edges, labels) if rounds else edges
+        rows = live.coalesce(1).limit(CC_DRIVER_EDGES + 1).collect()
+        if len(rows) <= CC_DRIVER_EDGES:
+            break
+        prop = both.join(labels, both.src == labels.id).select(
+            F.col("dst").alias("id"), "label"
+        )
+        labels = (
+            labels.unionByName(prop)
+            .groupBy("id")
+            .agg(F.min("label").alias("label"))
+            .localCheckpoint()
+        )
+        rounds += 1
+    log.info("connected_components rounds=%d driver_edges=%d", rounds, len(rows))
+    if not rows:
+        return labels
+    t = labels.schema["label"].dataType
+    # from pandas, which Arrow turns into a local relation: from a list,
+    # PySpark re-pickles the rows in a Python map, starting Python workers
+    roots = labels.sparkSession.createDataFrame(
+        pd.DataFrame(
+            list(_union_find_roots(rows).items()),
+            columns=["__l", "__root"],
+            dtype=object,
+        ),
+        StructType([StructField("__l", t), StructField("__root", t)]),
+    )
+    return labels.join(
+        F.broadcast(roots), F.col("label") == F.col("__l"), "left"
+    ).select("id", F.coalesce("__root", "label").alias("label"))
+
+
+def _live_edges(edges: DataFrame, labels: DataFrame | None = None) -> DataFrame:
+    """The distinct ``(src, dst)`` pairs, ``src < dst``, of the labels
+    that an edge joins; without ``labels``, of the edge's own ids."""
+    if labels is not None:
+        ls = labels.select(F.col("id").alias("src"), F.col("label").alias("l"))
+        ld = labels.select(F.col("id").alias("dst"), F.col("label").alias("r"))
+        edges = edges.join(ls, "src").join(ld, "dst").select(
+            F.col("l").alias("src"), F.col("r").alias("dst")
+        )
+    return (
+        edges.where(F.col("src") != F.col("dst"))
+        .select(
+            F.least("src", "dst").alias("src"),
+            F.greatest("src", "dst").alias("dst"),
+        )
+        .distinct()
+    )
+
+
+def _union_find_roots(pairs) -> dict:
+    """Union-find over label pairs: each label a pair touches whose
+    component has a smaller label, mapped to that minimum."""
+    parent: dict = {}
+
+    def find(x):
+        parent.setdefault(x, x)
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in pairs:
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    return {x: r for x in list(parent) if (r := find(x)) != x}

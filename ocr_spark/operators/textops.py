@@ -1440,8 +1440,6 @@ def bm25_topk(
     row_number prune to k, then a final rank over ≤ shards·k survivors
     — never a single-partition window over the full match set.
     """
-    from pyspark.sql import Window
-
     spark = df.sparkSession
     qterms = sorted(
         {(qi, t) for qi, q in enumerate(queries) for t in q.split(" ") if t}
@@ -1573,8 +1571,6 @@ def domain_cap(
     then the final rank over ≤ shards·k survivors per domain — so a
     head domain with billions of documents never funnels into one
     partition."""
-    from pyspark.sql import Window
-
     key = F.md5(F.concat(F.lit(salt + ":"), F.col(id_col).cast("string")))
     base = df.select(F.col(domain_col).alias("domain"), F.col(id_col)).withColumn(
         "__key", key
@@ -3105,10 +3101,11 @@ def sentence_chunk(
     boundaries land only between sentences and a long sentence
     overflows its chunk rather than splitting.
 
-    Scale shape: ONE hash exchange on the document id; the two window
-    passes ((id) running boundary count, (id, sent_id) first-token) and
-    the final (id, chunk) group-by are all subset-key clusterings the
-    (id) partitioning already satisfies — sorts, not shuffles."""
+    Scale shape: ONE hash exchange on the document id and ONE sort:
+    the sentence id (a running count of sentence starts) and its first
+    token (a running max of their positions) share the (id ORDER BY
+    idx) window, and the final (id, chunk) group-by is a subset-key
+    clustering the (id) partitioning already satisfies."""
     from pyspark.sql.window import Window
 
     tok = df.select(
@@ -3119,10 +3116,14 @@ def sentence_chunk(
     is_end = F.col("tok").rlike("[.!?]$") | (
         (F.col("idx") + 1) % int(max_sent) == 0
     )
-    s = tok.withColumn("sent_id", run_ids(w, F.lag(is_end).over(w)))
-    st = s.withColumn(
-        "sent_start",
-        F.min("idx").over(Window.partitionBy(id_col, "sent_id")),
+    # a token opens a sentence when the one before it ends one; the
+    # sentence's start is the last opening idx so far, a running max
+    opens = F.lag(is_end, 1, True).over(w)
+    upto = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    st = tok.select(
+        "*",
+        run_ids(w, opens).alias("sent_id"),
+        F.max(F.when(opens, F.col("idx"))).over(upto).alias("sent_start"),
     ).withColumn("chunk_id", F.expr(f"sent_start DIV {int(n)}").cast("int"))
     return st.groupBy(id_col, "chunk_id").agg(
         F.count(F.lit(1)).cast("long").alias("n_tokens"),

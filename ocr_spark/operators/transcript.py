@@ -1255,9 +1255,9 @@ def conversation_clusters(
 ) -> DataFrame:
     """The fuzzy-dedup funnel end: connect the verified near-dup pairs
     (:func:`near_dup_conversations`) into components with
-    :func:`graph.connected_components` (min-label propagation run to
-    its fixpoint, so any chain length converges) and elect one KEEPER
-    per cluster — the conversation with the most turns (near-dups are
+    :func:`graph.connected_components` (min-label propagation ended by
+    a driver union-find, so any chain length converges) and elect one
+    KEEPER per cluster — the conversation with the most turns (near-dups are
     typically truncated or re-exported copies, so the longest
     transcript is the most complete), ties on conv_id asc.  Singletons
     keep themselves.
@@ -1265,16 +1265,16 @@ def conversation_clusters(
     Scale shape: the edge frame is pairs-sized, the label frame is one
     row per CONVERSATION, and every round shuffles only (conv_id,
     label) — text is gone before the first round."""
-    from ocr_spark.operators.dedup import _own_caches
     from ocr_spark.operators.graph import connected_components
 
     pairs = near_dup_conversations(
         turns, num_hashes, band_size, min_jaccard_e6, max_bucket
     )
+    # not persisted: the final query reads it twice (ids, keeper join),
+    # and a cache first read there is built once per reference
     stats = (
         turns.groupBy("conv_id")
         .agg(F.count(F.lit(1)).cast("bigint").alias("n_turns"))
-        .persist()
     )
     labels = connected_components(
         pairs.select(F.col("conv_a").alias("src"), F.col("conv_b").alias("dst")),
@@ -1283,7 +1283,7 @@ def conversation_clusters(
     w = Window.partitionBy("cluster_id").orderBy(
         F.desc("n_turns"), F.asc("conv_id")
     )
-    out = (
+    return (
         labels.join(stats, "conv_id")
         .withColumn("__rn", F.row_number().over(w))
         .select(
@@ -1293,7 +1293,6 @@ def conversation_clusters(
             (F.col("__rn") == 1).alias("is_keeper"),
         )
     )
-    return _own_caches(out, [stats])
 
 
 def merge_role_runs(turns: DataFrame) -> DataFrame:

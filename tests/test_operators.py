@@ -601,9 +601,11 @@ def _graph_cases(id_strategy):
 
 
 @pytest.mark.parametrize("id_type", ["long", "string"])
-def test_connected_components_matches_union_find(spark, id_type):
+def test_connected_components_matches_union_find(spark, monkeypatch, id_type):
     from hypothesis import example, given, settings
     from hypothesis import strategies as st
+
+    from ocr_spark.operators import graph
 
     if id_type == "long":
         ids = st.integers(-(2**63), 2**63 - 1)
@@ -622,9 +624,13 @@ def test_connected_components_matches_union_find(spark, id_type):
     def check(case):
         node_ids, pairs = case
         got = _components(spark, node_ids, pairs, id_type)
-        assert got == _union_find_labels(node_ids, pairs)
+        assert got == _union_find_labels(node_ids, pairs), bound
 
-    check()
+    # 0: every round distributed; the default: the driver finishes
+    # before round 1; 2: rounds run, then the driver takes over
+    for bound in (0, graph.CC_DRIVER_EDGES, 2):
+        monkeypatch.setattr(graph, "CC_DRIVER_EDGES", bound)
+        check()
 
 
 def test_connected_components_long_chain_converges(spark):
@@ -637,6 +643,60 @@ def test_connected_components_long_chain_converges(spark):
     pairs = list(zip(ids, ids[1:]))
     got = _components(spark, ids, pairs, "long")
     assert got == {i: 1000 for i in ids}
+
+
+@pytest.mark.parametrize(
+    "case",
+    [test_connected_components_long_chain_converges,
+     test_duplicate_clusters_ids_near_int64_max],
+    ids=["long_chain", "near_int64_max"],
+)
+def test_connected_components_edge_cases_fully_distributed(spark, monkeypatch, case):
+    from ocr_spark.operators import graph
+
+    monkeypatch.setattr(graph, "CC_DRIVER_EDGES", 0)
+    case(spark)
+
+
+# a 4-node path, a triangle, a reversed duplicate, a self-loop and three
+# isolated ids: 6 live edges before round 1, 1 (3-1) after it, and
+# 3 rounds (1 to 5 is 3 hops) to the fixpoint
+_PATH_TRIANGLE = (
+    list(range(10)),
+    [(5, 3), (3, 8), (8, 1), (2, 7), (7, 9), (9, 2), (3, 5), (4, 4)],
+)
+
+
+@pytest.mark.parametrize(
+    "bound, log_line",
+    [(0, "rounds=3 driver_edges=0"),
+     (5, "rounds=1 driver_edges=1"),
+     (6, "rounds=0 driver_edges=6")],
+)
+def test_connected_components_driver_handoff_at_bound(
+    spark, monkeypatch, caplog, bound, log_line
+):
+    import logging
+
+    from ocr_spark.operators import graph
+
+    monkeypatch.setattr(graph, "CC_DRIVER_EDGES", bound)
+    caplog.set_level(logging.INFO, logger="ocr_spark")
+    ids, pairs = _PATH_TRIANGLE
+    assert _components(spark, ids, pairs, "long") == _union_find_labels(ids, pairs)
+    assert [r.getMessage() for r in caplog.records if r.name == "ocr_spark"] == [
+        f"connected_components {log_line}"
+    ]
+
+
+@pytest.mark.parametrize("bound", [0, None])
+def test_connected_components_null_endpoint_is_no_edge(spark, monkeypatch, bound):
+    from ocr_spark.operators import graph
+
+    if bound is not None:
+        monkeypatch.setattr(graph, "CC_DRIVER_EDGES", bound)
+    got = _components(spark, [1, 2, 3], [(1, None), (1, 2)], "long")
+    assert got == {1: 1, 2: 1, 3: 3}
 
 
 def test_ann_recall_vs_exact_baseline(spark):

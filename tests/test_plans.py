@@ -1119,9 +1119,11 @@ def test_sentence_chunk_single_exchange(spark):
 
     docs = spark.read.parquet(f"{SF}/documents.parquet")
     plan = _plan(textops.sentence_chunk(docs))
-    # one hash exchange on doc_id; the (id, sent_id) window and the
-    # (id, chunk) group-by are subset-key clusterings satisfied by it
+    # one hash exchange on doc_id; the (id, chunk) group-by is a
+    # subset-key clustering satisfied by it, and the sentence ids and
+    # sentence starts share the one (id ORDER BY idx) window sort
     assert len(_exchange_blocks(plan)) == 1
+    assert _sorts(plan) == 1
     assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
 
 
