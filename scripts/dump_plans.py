@@ -153,13 +153,15 @@ def main() -> int:
         ),
         (
             "Duplicate clustering round (`duplicate_clusters`, one iteration)",
-            "At the head of each round `graph.connected_components` collects "
-            "at most `CC_DRIVER_EDGES` + 1 live edges (distinct label pairs an "
-            "edge still joins); if they fit, union-find on the driver ends the "
+            "Before round 1, and after a round that changed at most "
+            "`CC_DRIVER_EDGES` labels, `graph.connected_components` collects at "
+            "most `CC_DRIVER_EDGES` + 1 live edges (distinct label pairs an edge "
+            "still joins); if they fit, union-find on the driver ends the "
             "closure and a broadcast join maps each label to its root. "
             "Otherwise one distributed round runs: one join (edges × labels) + "
-            "one keyed min-aggregate, materialized by an eager "
-            "localCheckpoint. Shown here: "
+            "one keyed min-aggregate; an Observation on the round's eager "
+            "localCheckpoint counts the changed labels, and a round that "
+            "changes none ends the loop. Shown here: "
             "the verified-pair edge build feeding round 1 — LSH candidates joined "
             "to per-doc shingle arrays (computed once, by id) for the mandatory "
             "Jaccard verify.",

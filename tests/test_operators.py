@@ -627,7 +627,7 @@ def test_connected_components_matches_union_find(spark, monkeypatch, id_type):
         assert got == _union_find_labels(node_ids, pairs), bound
 
     # 0: every round distributed; the default: the driver finishes
-    # before round 1; 2: rounds run, then the driver takes over
+    # before round 1; 2: rounds run, then the driver may take over
     for bound in (0, graph.CC_DRIVER_EDGES, 2):
         monkeypatch.setattr(graph, "CC_DRIVER_EDGES", bound)
         check()
@@ -659,22 +659,36 @@ def test_connected_components_edge_cases_fully_distributed(spark, monkeypatch, c
 
 
 # a 4-node path, a triangle, a reversed duplicate, a self-loop and three
-# isolated ids: 6 live edges before round 1, 1 (3-1) after it, and
-# 3 rounds (1 to 5 is 3 hops) to the fixpoint
+# isolated ids: 6 live edges before round 1.  Round 1 changes 4 labels
+# and leaves 1 live edge (3-1); round 2 changes 1.  1 to 5 is 3 hops, so
+# round 4 is the first that changes nothing.
 _PATH_TRIANGLE = (
     list(range(10)),
     [(5, 3), (3, 8), (8, 1), (2, 7), (7, 9), (9, 2), (3, 5), (4, 4)],
 )
 
+# hub 100 joins leaves 10-19 and, through 50, id 0.  Round 1 changes
+# only 100 and 50 but leaves 10 live edges ((0, 10) and 10 to 11-19), so
+# a bound of 5 collects after it, overflows, and waits for the changed
+# count to halve; rounds 2 and 3 change 10 labels each, round 4 none.
+_HUB = (
+    [0, 50, 100, *range(10, 20)],
+    [(100, 50), (50, 0), *((100, i) for i in range(10, 20))],
+)
+
 
 @pytest.mark.parametrize(
-    "bound, log_line",
-    [(0, "rounds=3 driver_edges=0"),
-     (5, "rounds=1 driver_edges=1"),
-     (6, "rounds=0 driver_edges=6")],
+    "graph_case, bound, log_line",
+    [(_PATH_TRIANGLE, 0, "rounds=4 driver_edges=0"),
+     (_PATH_TRIANGLE, 3, "rounds=2 driver_edges=1"),
+     (_PATH_TRIANGLE, 5, "rounds=1 driver_edges=1"),
+     (_PATH_TRIANGLE, 6, "rounds=0 driver_edges=6"),
+     (_HUB, 5, "rounds=4 driver_edges=0")],
+    ids=["path_triangle-0", "path_triangle-3", "path_triangle-5",
+         "path_triangle-6", "hub-5"],
 )
 def test_connected_components_driver_handoff_at_bound(
-    spark, monkeypatch, caplog, bound, log_line
+    spark, monkeypatch, caplog, graph_case, bound, log_line
 ):
     import logging
 
@@ -682,7 +696,7 @@ def test_connected_components_driver_handoff_at_bound(
 
     monkeypatch.setattr(graph, "CC_DRIVER_EDGES", bound)
     caplog.set_level(logging.INFO, logger="ocr_spark")
-    ids, pairs = _PATH_TRIANGLE
+    ids, pairs = graph_case
     assert _components(spark, ids, pairs, "long") == _union_find_labels(ids, pairs)
     assert [r.getMessage() for r in caplog.records if r.name == "ocr_spark"] == [
         f"connected_components {log_line}"
